@@ -500,19 +500,19 @@ object Queries {
     * checkpoints on tmpfs; a long-lived production checkpoint on object
     * storage can re-enable it via the session conf.
     *
-    * The session's shuffle width is restored after `body` (start +
-    * awaitTermination must both run inside) — the post-stream batch query
-    * over the memory sink keeps the session's own configuration. Output
-    * is partitioning-independent for every caller (aggregates, joins, or
+    * Both confs are restored after `body` (start + awaitTermination must
+    * both run inside) — the post-stream batch query over the memory sink
+    * keeps the session's own configuration. Output is
+    * partitioning-independent for every caller (aggregates, joins, or
     * key-projected dedup), so results are bit-identical — the oracle
     * compare pins that. */
   private def withStreamParallelism[T](spark: SparkSession,
       filesPerTrigger: Int)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val target = math.max(1, math.min(prev.toInt, filesPerTrigger))
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", target.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val target = math.max(1, math.min(width, filesPerTrigger))
+    graft.hotdog.Pipeline.withConf(spark,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> target.toString)(body)
   }
 
   /** The STREAMING path through the driver contract: sequences stream →
@@ -1482,8 +1482,8 @@ object Queries {
   /** Token-distribution diversity directly over the sequences table's
     * `tokens: array<int32>` column (the BASELINE input_hint payload):
     * per-sequence token-id entropy + total/distinct token counts via the
-    * one-pass [[graft.ops.TokenEntropy]] kernel. The oracle rebuilds the
-    * histogram by exploding every codepoint token in DuckDB. */
+    * one-pass [[graft.ops.opscol.tokenEntropy]] kernel. The oracle
+    * rebuilds the histogram by exploding every codepoint token in DuckDB. */
   def tokEntropy(spark: SparkSession, dir: String): DataFrame =
     graft.ops.TokenOps.tokenEntropyStats(
       eventSequences(spark, dir).select("doc_id", "tokens"),
@@ -1493,8 +1493,8 @@ object Queries {
 
   /** Character-diversity quality signal: per-doc Shannon entropy (nats)
     * of the normalized text's codepoint distribution + total/distinct
-    * codepoint counts, via the one-pass [[graft.ops.CharEntropy]] kernel.
-    * The oracle recomputes the histogram by exploding every character,
+    * codepoint counts, via the one-pass [[graft.ops.opscol.charEntropy]]
+    * kernel. The oracle recomputes the histogram by exploding every character,
     * so the kernel's counting AND the ln arithmetic are load-bearing. */
   def txtEntropy(spark: SparkSession, dir: String): DataFrame =
     TextAnalysis.charEntropyStats(

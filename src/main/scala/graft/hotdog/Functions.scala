@@ -1,8 +1,9 @@
 package graft.hotdog
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.catalyst.expressions.Expression
+import graft.ops.{Bloom, opscol}
 
 /** SQL-callable registration of every custom expression, so `spark.sql`
   * users get the full operator surface:
@@ -16,44 +17,40 @@ object Functions {
   def registerAll(spark: SparkSession): Unit = {
     def reg(name: String)(b: Seq[Expression] => Expression): Unit =
       graftshim.registerFunction(spark, name, b)
-    reg("codepoints_to_string")(a => CodepointsToString(a.head))
-    reg("string_to_codepoints")(a => StringToCodepoints(a.head))
-    reg("handlebars_escape")(a => HandlebarsEscape(a.head))
+    // kernels are built by the same Column functions the DataFrame API uses
+    def kernel(name: String)(b: Seq[Column] => Column): Unit =
+      reg(name)(a => graftshim.expression(b(a.map(graftshim.column))))
+    def constant(c: Column): Any = graftshim.expression(c).eval(null)
+    def int(c: Column): Int = constant(c).asInstanceOf[Number].intValue()
+    kernel("codepoints_to_string")(a => exprs.codepointsToString(a.head))
+    kernel("string_to_codepoints")(a => exprs.stringToCodepoints(a.head))
+    kernel("handlebars_escape")(a => exprs.handlebarsEscape(a.head))
     reg("syslog_parse")(a => SyslogParse(a.head))
     reg("jmespath_eval")(a => JmesPathEval(a(0), a(1)))
     reg("json_hotdog_merge")(a => JsonHotdogMerge(a(0), a(1)))
     reg("json_valid")(a => JsonValid(a.head))
     reg("json_field_profile")(a => JsonFieldProfile(a.head))
     reg("json_hotdog_merge_in")(a => JsonHotdogMergeIn(a(0), a(1), a(2)))
-    reg("simhash64")(a => graft.ops.SimHash64(a.head))
-    reg("minhash_sig")(a => graft.ops.MinHashSig(a(0), a(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => other.eval(null).asInstanceOf[Number].intValue()
-    }))
-    reg("cosine_sim_f")(a => graft.ops.CosineSimF(a(0), a(1)))
-    reg("jaccard_pct")(a => graft.ops.JaccardPct(a(0), a(1)))
-    def intLit(e: Expression): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => other.eval(null).asInstanceOf[Number].intValue()
-    }
-    reg("hyperplane_sig")(a => graft.ops.HyperplaneSig(a(0), intLit(a(1))))
-    reg("minhash_bands")(a => graft.ops.MinHashBands(a(0), intLit(a(1))))
-    reg("word_shingles")(a => graft.ops.WordShingles(a(0), intLit(a(1))))
+    kernel("simhash64")(a => opscol.simhash64(a.head))
+    kernel("minhash_sig")(a => opscol.minhashSig(a(0), int(a(1))))
+    kernel("cosine_sim_f")(a => opscol.cosineSimF(a(0), a(1)))
+    kernel("jaccard_pct")(a => opscol.jaccardPct(a(0), a(1)))
+    kernel("hyperplane_sig")(a => opscol.hyperplaneSig(a(0), int(a(1))))
+    kernel("minhash_bands")(a => opscol.minhashBands(a(0), int(a(1))))
+    kernel("word_shingles")(a => opscol.wordShingles(a(0), int(a(1))))
     // token_ngrams(tokens, n [, distinct]) — comma-joined sliding windows
-    reg("token_ngrams")(a => graft.ops.TokenNgrams(a(0), intLit(a(1)),
-      a.length > 2 && a(2).eval(null).asInstanceOf[Boolean]))
+    kernel("token_ngrams")(a => opscol.tokenNgrams(a(0), int(a(1)),
+      a.length > 2 && constant(a(2)).asInstanceOf[Boolean]))
     // regex_captures(str, pattern, groupIdx...) — groups default to (1)
     reg("regex_captures")(a => RegexCaptures(a(0), a(1),
-      if (a.length > 2) a.drop(2).map(intLit) else Seq(1)))
+      if (a.length > 2) a.drop(2).map(e => int(graftshim.column(e))) else Seq(1)))
     // bloom_might_contain(bits array<bigint>, key_hash bigint, k)
-    reg("bloom_might_contain")(a =>
-      graft.ops.BloomMightContain(a(0), a(1), intLit(a(2))))
+    kernel("bloom_might_contain")(a => Bloom.mightContain(a(0), a(1), int(a(2))))
     // word_ngrams_multi(text, n) — in-order word n-grams with multiplicity
-    reg("word_ngrams_multi")(a =>
-      graft.ops.WordNgramsMulti(a(0), intLit(a(1))))
+    kernel("word_ngrams_multi")(a => opscol.wordNgramsMulti(a(0), int(a(1))))
     // char_entropy(text) — Shannon entropy (nats) of the codepoint histogram
-    reg("char_entropy")(a => graft.ops.CharEntropy(a.head))
+    kernel("char_entropy")(a => opscol.charEntropy(a.head))
     // token_entropy(tokens) — Shannon entropy (nats) of the token-id histogram
-    reg("token_entropy")(a => graft.ops.TokenEntropy(a.head))
+    kernel("token_entropy")(a => opscol.tokenEntropy(a.head))
   }
 }

@@ -74,11 +74,8 @@ object Pipeline {
     val emitted = emittedOnly(routed)
       .select((columns :+ "topic").distinct.map(col): _*)
       .withColumn("batch_id", lit(batchId))
-    val spark = routed.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val t0 = System.nanoTime()
-    try {
+    withConf(routed.sparkSession, DynamicOverwrite) {
+      val t0 = System.nanoTime()
       emitted
         .repartition(col("batch_id"), col("topic"),
           pmod(xxhash64(col("doc_id")), lit(salts)))
@@ -87,11 +84,20 @@ object Pipeline {
         .mode(SaveMode.Overwrite)
         .parquet(outDir)
       (System.nanoTime() - t0) / 1000L
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+    }
+  }
+
+  private val DynamicOverwrite = "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
+
+  /** Run `body` with the given session confs set, then put each back as it
+    * was: its previous explicit value, or unset if it had none. */
+  private[graft] def withConf[T](spark: SparkSession, settings: (String, String)*)(
+      body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -122,15 +128,15 @@ object Pipeline {
     * (`Dataset.observe` + [[LineageAgg]]), so the cascade runs exactly
     * once per batch and NOTHING is cached or re-read.
     *
-    * Why not the previous slim DISK_ONLY cache (still available as
-    * spark.graft.writeBatch.mode=cache): it evaluated the cascade once but
-    * wrote ~3 GB and re-read ~6 GB of cache per 48M-row batch — at 32
-    * cores that extra memory/disk traffic is pure scaling drag (the
-    * streaming bench measured per-CPU time inflating 1.45× from 8→32
-    * cores on this single-socket box; every avoidable byte moved makes it
-    * worse). The observed aggregate costs one hash-map probe per row in
-    * the map stage and ships #partitions×#topics×#files-per-partition
-    * tiny slots to the driver.
+    * Why not a slim DISK_ONLY cache feeding two passes (the previous
+    * design, deleted after measurement: this path gave +21–26 % rows/s
+    * over it): it evaluated the cascade once but wrote ~3 GB and re-read
+    * ~6 GB of cache per 48M-row batch — at 32 cores that extra memory/disk
+    * traffic is pure scaling drag (the streaming bench measured per-CPU
+    * time inflating 1.45× from 8→32 cores on a single-socket host; every
+    * avoidable byte moved makes it worse). The observed aggregate costs
+    * one hash-map probe per row in the map stage and ships
+    * #partitions×#topics×#files-per-partition tiny slots to the driver.
     *
     * Exactly-once lineage BY CONSTRUCTION: slots are keyed by
     * (partition_id, topic, input_file) and each partition's input is
@@ -138,70 +144,45 @@ object Pipeline {
     * slots and the merge (map union) is idempotent — the north_rule's
     * "every stage emits per-partition lineage and metric rows", with the
     * metric channel being Spark's observed-metrics accumulator.
-    *
-    * Modes (spark.graft.writeBatch.mode): "observe" (default, one pass),
-    * "cache" (slim DISK_ONLY projection feeding two passes), anything
-    * else = two full cascade evaluations (measurement baseline).
     * @return sink write micros (the kafka.producer.sent timer slot). */
   def writeBatch(routed: DataFrame, outDir: String, auditDir: String,
       batchId: Long, saltBuckets: Int = 0): Long = {
     val spark = routed.sparkSession
-    spark.conf.get("spark.graft.writeBatch.mode", "observe") match {
-      case "observe" =>
-        val obs = org.apache.spark.sql.Observation(
-          s"graft_audit_${batchId}_${System.nanoTime()}")
-        val lineage = udaf(LineageAgg)
-        val observed = routed
-          .withColumn("_pid", spark_partition_id())
-          .withColumn("input_file", input_file_name())
-          .observe(obs, lineage(col("_pid"), col("topic"), col("input_file"),
-            coalesce(col("parse_ok"), lit(false)),
-            col("err_merge_invalid_json").cast("long"),
-            col("err_merge_target_not_json").cast("long")).as("lineage"))
-        val micros = writeFanOut(observed, outDir, batchId, saltBuckets)
-        // the listener delivering observed metrics fires asynchronously
-        // just after the action returns — poll briefly, then fall back to
-        // an exact recompute (never silently skip the audit)
-        var m = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-        var waited = 0
-        while (m.isEmpty && waited < 10000) {
-          Thread.sleep(50); waited += 50
-          m = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-        }
-        m.get("lineage") match {
-          case Some(slots) => writeAuditRows(spark,
-            slots.asInstanceOf[scala.collection.Map[String, scala.collection.Seq[Long]]],
-            auditDir, batchId)
-          case None =>
-            // the exact-recompute fallback re-runs the FULL cascade — the
-            // double evaluation observe mode exists to eliminate. Never
-            // silent (ADVICE r4): in a streaming bench this would
-            // invisibly double every batch's cost.
-            System.err.println(s"[graft-hotdog] WARN batch $batchId: " +
-              "observed lineage metrics not delivered within 10s; " +
-              "falling back to a full audit recompute (cascade runs twice)")
-            writeAudit(routed, auditDir, batchId)
-        }
-        micros
-      case "cache" =>
-        val slim = routed.select(col("doc_id"), col("source"), col("topic"),
-            col("output"), col("parse_ok"), col("err_merge_invalid_json"),
-            col("err_merge_target_not_json"),
-            input_file_name().as("input_file"))
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        try {
-          val micros = writeFanOut(slim, outDir, batchId, saltBuckets)
-          writeAudit(slim, auditDir, batchId)
-          micros
-        } finally {
-          slim.unpersist()
-          ()
-        }
-      case _ =>
-        val micros = writeFanOut(routed, outDir, batchId, saltBuckets)
-        writeAudit(routed, auditDir, batchId)
-        micros
+    val obs = org.apache.spark.sql.Observation(
+      s"graft_audit_${batchId}_${System.nanoTime()}")
+    val lineage = udaf(LineageAgg)
+    val observed = routed
+      .withColumn("_pid", spark_partition_id())
+      .withColumn("input_file", input_file_name())
+      .observe(obs, lineage(col("_pid"), col("topic"), col("input_file"),
+        coalesce(col("parse_ok"), lit(false)),
+        col("err_merge_invalid_json").cast("long"),
+        col("err_merge_target_not_json").cast("long")).as("lineage"))
+    val micros = writeFanOut(observed, outDir, batchId, saltBuckets)
+    // the listener delivering observed metrics fires asynchronously
+    // just after the action returns — poll briefly, then fall back to
+    // an exact recompute (never silently skip the audit)
+    var m = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
+    var waited = 0
+    while (m.isEmpty && waited < 10000) {
+      Thread.sleep(50); waited += 50
+      m = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
     }
+    m.get("lineage") match {
+      case Some(slots) => writeAuditRows(spark,
+        slots.asInstanceOf[scala.collection.Map[String, scala.collection.Seq[Long]]],
+        auditDir, batchId)
+      case None =>
+        // the exact-recompute fallback re-runs the FULL cascade — the
+        // double evaluation the observed audit exists to eliminate. Never
+        // silent (ADVICE r4): in a streaming bench this would
+        // invisibly double every batch's cost.
+        System.err.println(s"[graft-hotdog] WARN batch $batchId: " +
+          "observed lineage metrics not delivered within 10s; " +
+          "falling back to a full audit recompute (cascade runs twice)")
+        writeAudit(routed, auditDir, batchId)
+    }
+    micros
   }
 
   /** audit schema shared by the two writers (partition col batch_id and
@@ -254,12 +235,7 @@ object Pipeline {
     * and is "" for non-file sources (synthesized frames). Written
     * idempotently per batch_id. */
   def writeAudit(routed: DataFrame, auditDir: String, batchId: Long): Unit = {
-    // input_file may already be captured (writeBatch caches a slim
-    // projection; input_file_name() evaluates to "" on cached rows)
-    val withFile =
-      if (routed.columns.contains("input_file")) routed
-      else routed.withColumn("input_file", input_file_name())
-    val audit = withFile
+    val audit = routed.withColumn("input_file", input_file_name())
       .groupBy(col("topic"), col("input_file")).agg(
         count(lit(1)).as("rows"),
         sum(when(col("parse_ok"), 1L).otherwise(0L)).as("parsed_rows"),
@@ -272,16 +248,11 @@ object Pipeline {
 
   /** idempotent dynamic-partition write shared by both audit producers */
   private def writeAuditDf(spark: SparkSession, audit: DataFrame,
-      auditDir: String): Unit = {
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try audit.repartition(1).write.partitionBy("batch_id")
-      .mode(SaveMode.Overwrite).parquet(auditDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      auditDir: String): Unit =
+    withConf(spark, DynamicOverwrite) {
+      audit.repartition(1).write.partitionBy("batch_id")
+        .mode(SaveMode.Overwrite).parquet(auditDir)
     }
-  }
 
   /** Which batch_ids already completed (resume-from-checkpoint: a batch is
     * skipped iff its audit rows exist — audit is written AFTER the fan-out,

@@ -33,8 +33,8 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // single cascade evaluation per micro-batch: writeBatch persists a
-        // slim projection and feeds fan-out + audit from it
+        // single cascade evaluation per micro-batch: the audit rides the
+        // fan-out write as an observed metric (see Pipeline.writeBatch)
         Pipeline.writeBatch(Router.route(batch, cfg), outDir,
           s"$outDir-audit", batchId)
         ()

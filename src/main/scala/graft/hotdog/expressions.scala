@@ -7,9 +7,9 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static helpers invoked from both interpreted eval and generated code.
-  * (A top-level Scala object gets a mirror class with static forwarders,
-  * so `graft.hotdog.Codepoints.decode(...)` is valid in generated Java.)
+/** Static kernels behind [[exprs]]' decode / encode / escape columns,
+  * invoked from both interpreted eval and generated code (see
+  * [[graft.ops.opscol.kernel]]).
   */
 object Codepoints {
   /** tokens (Unicode codepoints) -> string. Inverse of [[encode]]. */
@@ -69,51 +69,6 @@ object Codepoints {
     }
     UTF8String.fromString(sb.toString)
   }
-}
-
-/** `CodepointsToString(tokens array<int>) -> string` — P6 decode
-  * (SURVEY.md §2.2). Codegen-friendly: stays inside whole-stage codegen. */
-case class CodepointsToString(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    Codepoints.decode(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.hotdog.Codepoints.decode($c)")
-  override protected def withNewChildInternal(newChild: Expression): CodepointsToString =
-    copy(child = newChild)
-  override def prettyName: String = "codepoints_to_string"
-}
-
-/** `StringToCodepoints(line string) -> array<int>` — the corpus
-  * tokenizer; exact inverse of [[CodepointsToString]]. */
-case class StringToCodepoints(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    Codepoints.encode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.hotdog.Codepoints.encode($c)")
-  override protected def withNewChildInternal(newChild: Expression): StringToCodepoints =
-    copy(child = newChild)
-  override def prettyName: String = "string_to_codepoints"
-}
-
-/** `HandlebarsEscape(s string) -> string` — the HTML escape handlebars
-  * applies to `{{var}}` (not `{{{var}}}`) substitutions (A2 in SURVEY §2.4). */
-case class HandlebarsEscape(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    Codepoints.htmlEscape(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.hotdog.Codepoints.htmlEscape($c)")
-  override protected def withNewChildInternal(newChild: Expression): HandlebarsEscape =
-    copy(child = newChild)
-  override def prettyName: String = "handlebars_escape"
 }
 
 /** Static helper for [[RegexCaptures]]: one compiled-pattern cache shared
@@ -223,9 +178,18 @@ case class NoPushdown(child: Expression) extends UnaryExpression {
 /** Column-level wrappers. */
 object exprs {
   import org.apache.spark.sql.graftshim
-  def codepointsToString(c: Column): Column = graftshim.column(CodepointsToString(expr(c)))
-  def stringToCodepoints(c: Column): Column = graftshim.column(StringToCodepoints(expr(c)))
-  def handlebarsEscape(c: Column): Column = graftshim.column(HandlebarsEscape(expr(c)))
+  private def codepoints(fn: String, dataType: DataType, c: Column): Column =
+    graft.ops.opscol.kernel(Codepoints.getClass, fn, dataType, c)
+  /** tokens array<int> (Unicode codepoints) -> string: P6 decode
+    * (SURVEY.md §2.2), inside whole-stage codegen */
+  def codepointsToString(c: Column): Column = codepoints("decode", StringType, c)
+  /** line string -> array<int>: the corpus tokenizer, exact inverse of
+    * [[codepointsToString]] */
+  def stringToCodepoints(c: Column): Column =
+    codepoints("encode", ArrayType(IntegerType, containsNull = false), c)
+  /** the HTML escape handlebars applies to `{{var}}` (not `{{{var}}}`)
+    * substitutions (A2 in SURVEY §2.4) */
+  def handlebarsEscape(c: Column): Column = codepoints("htmlEscape", StringType, c)
   def noPushdown(c: Column): Column = graftshim.column(NoPushdown(expr(c)))
   def expr(c: Column): Expression = graftshim.expression(c)
   def col(e: Expression): Column = graftshim.column(e)

@@ -2,13 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.BooleanType
 
 /** Incremental exact dedup of a NEW batch against a PRIOR corpus snapshot
   * — "dedup today's crawl against the existing corpus", the standing
@@ -52,9 +49,12 @@ object Bloom {
     * construction. */
   private def keyHash(key: Column): Column = xxhash64(key)
 
-  private def probe(bits: Column, h: Column, numHashes: Int): Column =
-    graftshim.column(BloomMightContain(
-      graftshim.expression(bits), graftshim.expression(h), numHashes))
+  /** bits (array<long>) MIGHT contain the key hashed to `h` (long).
+    * Null-intolerant: null bits / null hash → null → a filter drops the
+    * row, matching join null-key semantics. */
+  private[graft] def mightContain(bits: Column, h: Column, numHashes: Int): Column =
+    opscol.kernel(BloomKernel.getClass, "mightContain", BooleanType, bits, h,
+      opscol.scalar(numHashes))
 
   /** Build the sharded bloom index over `keys` (one string key column,
     * nulls dropped — a null key can never equal anything, join
@@ -88,7 +88,7 @@ object Bloom {
     val candidates = nb
       .join(broadcast(idx), Seq("shard"), "left")
       .filter(col("_k").isNotNull && col("bits").isNotNull &&
-        probe(col("bits"), col("_h"), numHashes))
+        mightContain(col("bits"), col("_h"), numHashes))
       .select("_k").distinct()
     // verification: which candidates REALLY exist in prior — the prior
     // side probes the broadcast candidate set (semi join), so the 100 TB
@@ -165,22 +165,4 @@ class BloomAgg(val words: Int, val numHashes: Int)
   override def finish(b: Array[Long]): Array[Long] = b
   override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-}
-
-/** bits (array<long>) MIGHT contain the key hashed to `right` (long).
-  * Codegen'd; null-intolerant (null bits / null hash → null → filter
-  * drops the row, matching join null-key semantics). */
-case class BloomMightContain(left: Expression, right: Expression, numHashes: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(bits: Any, h: Any): Any =
-    BloomKernel.mightContain(bits.asInstanceOf[ArrayData],
-      h.asInstanceOf[Long], numHashes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, h) =>
-      s"graft.ops.BloomKernel.mightContain($b, $h, $numHashes)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomMightContain =
-    copy(left = l, right = r)
-  override def prettyName: String = "bloom_might_contain"
 }

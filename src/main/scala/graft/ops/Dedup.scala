@@ -105,7 +105,7 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val gCols = groupCol.toSeq.map(col)
     // banding needs only (group?, id, band, bucket) — signatures never
-    // shuffle; bucket hashes are integer-native (MinHashBands, no string
+    // shuffle; bucket hashes are integer-native (minhashBands, no string
     // round-trip per band)
     // noPushdown: posexplode makes the optimizer infer size/isnotnull
     // filters on bb and substitute them through this Project — paying the

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * 100 TB. Re-expressed here the way kdb/DuckDB execute it: the
   * dimension's sorted [lo, hi) bounds ship to every task as two literal
   * arrays inside a codegen'd binary-search expression
-  * ([[RangeBucket]]), each row resolves its interval INDEX in O(log m)
+  * ([[opscol.rangeBucket]]), each row resolves its interval INDEX in O(log m)
   * with zero shuffle, and the payload attaches by a plain broadcast
   * HASH join on that index — the one join shape AQE can reason about.
   *

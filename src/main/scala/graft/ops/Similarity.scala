@@ -59,7 +59,7 @@ object Similarity {
     require(planes % bands == 0, "bands must divide planes")
     val per = planes / bands
     require(multiProbe >= 0 && multiProbe <= per, "multiProbe in [0, planes/bands]")
-    // banded chunks straight from the plane matrix (HyperplaneBandChunks):
+    // banded chunks straight from the plane matrix (opscol.hyperplaneBandChunks):
     // bit-identical to shifting the packed signature for planes <= 64,
     // and lifts the 64-plane cap (only the per-band width must fit a long)
     def banded(df: DataFrame, idAs: String, probes: Int) =
@@ -301,7 +301,7 @@ object Similarity {
     * Returns near-dup pairs (id_a, id_b, sim_e6) with cosine ≥ minSimE6.
     *
     * Shuffle profile: the signature is ONE codegen'd expression per row
-    * ([[HyperplaneSig]], packed long, cached ±1 plane matrix); banding
+    * ([[opscol.hyperplaneSig]], packed long, cached ±1 plane matrix); banding
     * explodes to `bands` rows of (band int, chunk long, id) — 20 B/row —
     * and buckets join on (band, chunk). Candidate id-pairs are distinct'd
     * BEFORE the vectors re-join, so embeddings never ride the pair shuffle.

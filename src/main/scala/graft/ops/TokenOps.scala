@@ -322,7 +322,7 @@ object TokenOps {
     * exactly — the property tok_bpe_apply's oracle hash-checks).
     *
     * Scale shape: the whole merge chain is ONE zero-shuffle projection —
-    * `rules.length` fused [[BpeMergePair]] codegen kernels over each row,
+    * `rules.length` fused [[opscol.bpeMergePair]] codegen kernels over each row,
     * no join, no broadcast (the rules are literals baked into the plan,
     * the way a production encoder ships its frozen merges file). A real
     * vocab is ~50k rules ⇒ 50k chained calls would blow the codegen/

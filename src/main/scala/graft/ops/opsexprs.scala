@@ -1,16 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static helpers + custom codegen expressions for the dedup / similarity
-  * operators. All hashing is self-contained (FNV-1a 64) so signatures are
-  * stable across Spark versions and partitionings.
+/** Static kernels behind the dedup / similarity / token operators, called
+  * through [[opscol]]. All hashing is self-contained (FNV-1a 64) so
+  * signatures are stable across Spark versions and partitionings.
   */
 object OpsKernels {
 
@@ -173,7 +173,9 @@ object OpsKernels {
     * normalize+split+filter evaluations per row. Here: one hand-scanner
     * split ([[splitNormWords]], the wordShingles normalization) and one
     * membership probe per word per language. */
-  def langId4(text: UTF8String, sets: Array[java.util.HashSet[String]]): UTF8String = {
+  def langId4(text: UTF8String,
+      stops: KernelTable[Array[java.util.HashSet[String]]]): UTF8String = {
+    val sets = stops.get
     val words = splitNormWords(text)
     var en = 0; var es = 0; var de = 0; var fr = 0
     var i = 0
@@ -602,7 +604,8 @@ object OpsKernels {
     * over the row's current token buffer (exactly chained bpeMergePair,
     * without `rules.length` generated methods). Single int scratch
     * buffer, each pass compacting in place. */
-  def bpeMergeAll(a: ArrayData, rules: Array[Int]): ArrayData = {
+  def bpeMergeAll(a: ArrayData, table: KernelTable[Array[Int]]): ArrayData = {
+    val rules = table.get
     var n = a.numElements()
     val buf = new Array[Int](n)
     var i = 0
@@ -631,7 +634,9 @@ object OpsKernels {
   /** Interval binary search: index i of the [los(i), his(i)) interval
     * containing v, or -1 (gap / out of range). Arrays sorted by lo,
     * non-overlapping — validated at plan build, not per row. */
-  def rangeBucket(v: Double, los: Array[Double], his: Array[Double]): Int = {
+  def rangeBucket(v: Double, lows: KernelTable[Array[Double]],
+      highs: KernelTable[Array[Double]]): Int = {
+    val los = lows.get; val his = highs.get
     var lo = 0
     var hi = los.length - 1
     var ans = -1
@@ -702,7 +707,8 @@ object OpsKernels {
     * contamination-rare; duplicate windows share a key, two different
     * grams cannot, so distinct hit keys ≡ the distinct-gram hit count
     * of tokenGramKeys(distinct=true) + membership). */
-  def countGramHits(tokens: ArrayData, n: Int, table: Array[Long]): Long = {
+  def countGramHits(tokens: ArrayData, n: Int, pairs: KernelTable[Array[Long]]): Long = {
+    val table = pairs.get
     val len = tokens.numElements()
     if (len < n || table.length == 0) return 0L
     val m1 = new Array[Long](len)
@@ -778,23 +784,17 @@ object OpsKernels {
       total += fr(i).numElements()
       i += 1
     }
-    // insertion sort on parallel arrays — fragment counts per chunk are
-    // budget-bounded and tiny in practice (≤ docs spanning the chunk)
-    i = 1
-    while (i < n) {
-      val ko = offs(i); val kf = fr(i)
-      var j = i - 1
-      while (j >= 0 && offs(j) > ko) {
-        offs(j + 1) = offs(j); fr(j + 1) = fr(j); j -= 1
-      }
-      offs(j + 1) = ko; fr(j + 1) = kf
-      i += 1
-    }
+    // O(n log n): a budget-sized chunk of one-token documents holds
+    // thousands of fragments
+    val idx = Array.tabulate[Integer](n)(Int.box)
+    java.util.Arrays.sort(idx, (x: Integer, y: Integer) =>
+      java.lang.Long.compare(offs(x), offs(y)))
+    val byOff = idx.map(x => fr(x))
     val out = new Array[Int](total)
     var p = 0
     i = 0
     while (i < n) {
-      val f = fr(i)
+      val f = byOff(i)
       val m = f.numElements()
       var k = 0
       while (k < m) { out(p) = f.getInt(k); p += 1; k += 1 }
@@ -916,395 +916,149 @@ object OpsKernels {
   }
 }
 
-/** `HyperplaneBandChunks(v array<float>, planes, bands) -> array<long>`:
-  * the banded LSH chunks directly — chunk b packs the sign bits of planes
-  * [b·per, (b+1)·per) of the SAME plane matrix as [[HyperplaneSig]], so
-  * for planes ≤ 64 the values are bit-identical to extracting chunk b
-  * from the packed signature; unlike the packed form, the plane count is
-  * unlimited (per-band width ≤ 64 is the only packing constraint). */
-case class HyperplaneBandChunks(child: Expression, planes: Int, bands: Int)
-    extends UnaryExpression {
-  require(planes > 0 && bands > 0 && planes % bands == 0,
-    s"bands must divide planes, got planes=$planes bands=$bands")
-  require(planes / bands <= 64, s"per-band chunk must fit a long, got ${planes / bands} bits")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.hyperplaneBandChunks(input.asInstanceOf[ArrayData], planes, bands)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.hyperplaneBandChunks($c, $planes, $bands)")
-  override protected def withNewChildInternal(c: Expression): HyperplaneBandChunks =
-    copy(child = c)
-  override def prettyName: String = "hyperplane_band_chunks"
-}
 
-/** `SimHash64(tokens array<string>) -> long` */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.simhash64(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.simhash64($c)")
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
-  override def prettyName: String = "simhash64"
-}
-
-/** `MinHashSig(shingles array<string>, k) -> array<long>` (k literal) */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.minhash(input.asInstanceOf[ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.minhash($c, $k)")
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-  override def prettyName: String = "minhash_sig"
-}
-
-/** `CosineSimF(a array<float>, b array<float>) -> double` */
-case class CosineSimF(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    OpsKernels.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.ops.OpsKernels.cosineF($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimF =
-    copy(left = l, right = r)
-  override def prettyName: String = "cosine_sim_f"
-}
-
-/** [[CosineSimF]] for array<double> inputs. */
-case class CosineSimD(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    OpsKernels.cosineD(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.ops.OpsKernels.cosineD($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSimD =
-    copy(left = l, right = r)
-  override def prettyName: String = "cosine_sim_d"
-}
-
-/** `JaccardPct(a array<string>, b array<string>) -> long`: one-pass
-  * integer jaccard percent over DISTINCT shingle arrays (the verify
-  * primitive of every dedup path). */
-case class JaccardPct(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    OpsKernels.jaccardPct(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.ops.OpsKernels.jaccardPct($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardPct =
-    copy(left = l, right = r)
-  override def prettyName: String = "jaccard_pct"
-}
-
-/** `WordShingles(text, n) -> array<string>` (n literal): normalized
-  * distinct word n-gram shingles in one codegen'd pass. */
-/** `WordNgramsMulti(text, n) -> array<string>`: in-order word n-grams
-  * with multiplicity; < n words => empty array. */
-case class WordNgramsMulti(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "ngram size must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.wordNgramsMulti(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.wordNgramsMulti($c, $n)")
-  override protected def withNewChildInternal(c: Expression): WordNgramsMulti = copy(child = c)
-  override def prettyName: String = "word_ngrams_multi"
-}
-
-/** `CharEntropy(text) -> double`: Shannon entropy (nats) of the string's
-  * codepoint distribution in one codegen'd kernel call — the explode →
-  * groupBy(doc, char) → groupBy(doc) Column form costs two shuffles over
-  * every character of the corpus; this is a narrow projection. */
-case class CharEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.charEntropy(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.charEntropy($c)")
-  override protected def withNewChildInternal(c: Expression): CharEntropy = copy(child = c)
-  override def prettyName: String = "char_entropy"
-}
-
-/** `TokenEntropy(tokens array<int>) -> double`: Shannon entropy (nats) of
-  * the sequence's token-id distribution — [[CharEntropy]]'s token-axis
-  * sibling, one codegen'd kernel call per row. */
-case class TokenEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.intArrayEntropy(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.intArrayEntropy($c)")
-  override protected def withNewChildInternal(c: Expression): TokenEntropy = copy(child = c)
-  override def prettyName: String = "token_entropy"
-}
-
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, "shingle size must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.wordShingles(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.wordShingles($c, $n)")
-  override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
-  override def prettyName: String = "word_shingles"
-}
-
-/** `MinHashBands(sig array<long>, bands) -> array<long>` (bands literal):
-  * the LSH band-bucket hashes, computed integer-native in one pass. */
-case class MinHashBands(child: Expression, bands: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.minhashBands(input.asInstanceOf[ArrayData], bands)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.minhashBands($c, $bands)")
-  override protected def withNewChildInternal(c: Expression): MinHashBands = copy(child = c)
-  override def prettyName: String = "minhash_bands"
-}
-
-/** `HyperplaneSig(vec array<float>, planes) -> long` (planes literal ≤ 64):
-  * the whole LSH signature in one codegen'd expression call. */
-case class HyperplaneSig(child: Expression, planes: Int) extends UnaryExpression {
-  require(planes > 0 && planes <= 64, s"planes must be in [1,64], got $planes")
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.hyperplaneSig(input.asInstanceOf[ArrayData], planes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.hyperplaneSig($c, $planes)")
-  override protected def withNewChildInternal(c: Expression): HyperplaneSig = copy(child = c)
-  override def prettyName: String = "hyperplane_sig"
-}
-
-/** `TokenPairKeys(tokens array<int>) -> array<long>`: every ADJACENT
-  * token pair packed render-free into one long `(a << 32) | b` — the
-  * BPE pair-count key (pack order makes the long's natural ascending
-  * order the (a, b) lexicographic tie-break). Token ids must be
-  * non-negative (codepoints / vocab ids; rejected loudly otherwise —
-  * a negative id would corrupt the pack). */
-/** `CountGramHits(tokens array<int>, n, table) -> bigint` — distinct
-  * token-n-gram hits against the plan-baked sorted pair table (see
-  * [[OpsKernels.countGramHits]]); the exact, zero-shuffle,
-  * allocation-free form of "render keys → explode → broadcast-probe →
-  * count" for benchmark-sized probe sets. */
-case class CountGramHits(child: Expression, n: Int, table: Array[Long])
-    extends UnaryExpression {
-  require(n >= 1, "gram size must be >= 1")
-  require(table.length % 2 == 0, "pair table must hold (hi, lo) longs")
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.countGramHits(input.asInstanceOf[ArrayData], n, table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("gramTable", table, "long[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.OpsKernels.countGramHits($c, $n, $tableRef)")
+/** A constant kernel argument (gram table, interval bounds, merge rules,
+  * stopword sets) carried in the plan as an `ObjectType` literal. Equality
+  * and hash are structural, so two kernels built from equal but distinct
+  * arrays are semantically equal: subexpression elimination and exchange
+  * reuse see through them, where a bare array compares by reference.
+  * `toString` stays short, so plan text never prints a 50k-rule table. */
+final class KernelTable[T <: AnyRef](val get: T) extends Serializable {
+  // planning hashes expressions often; a 50k-rule table costs O(n) a time
+  private lazy val hash = java.util.Arrays.deepHashCode(Array[AnyRef](get))
+  override def hashCode: Int = hash
+  override def equals(o: Any): Boolean = o match {
+    case t: KernelTable[_] => hash == t.hashCode && java.util.Objects.deepEquals(get, t.get)
+    case _ => false
   }
-  override protected def withNewChildInternal(c: Expression): CountGramHits =
-    copy(child = c)
-  override def prettyName: String = "count_gram_hits"
+  override def toString: String =
+    s"KernelTable(length=${java.lang.reflect.Array.getLength(get)}, hash=$hashCode)"
 }
 
-/** `LangId4(text, stops) -> string` — one-pass stopword-argmax language
-  * ID (see [[OpsKernels.langId4]]); `stops` = the (en, es, de, fr) word
-  * lists in tie-break order. Null text propagates null — the caller
-  * ([[TextAnalysis.langId]]) coalesces to the Column chain's null
-  * behavior. */
-case class LangId4(child: Expression, stops: Array[Array[String]])
-    extends UnaryExpression {
-  require(stops.length == 4, "exactly (en, es, de, fr) stop lists")
-  @transient private lazy val sets: Array[java.util.HashSet[String]] =
-    stops.map { l =>
+/** Column functions over the kernels above. Each is one [[kernel]] call:
+  * the static method as a Catalyst expression, with scalar arguments as
+  * literals and constant tables as [[KernelTable]] literals. */
+object opscol {
+  /** `cls.fn(args...)` as a `StaticInvoke`. Generated code calls the static
+    * method directly inside whole-stage codegen (a Scala object's mirror
+    * class has static forwarders); interpreted eval finds the same method
+    * by reflection from the argument data types. Null-intolerant: a null
+    * argument gives null without calling `fn`, and the result is nullable
+    * iff an argument is. */
+  def kernel(cls: Class[_], fn: String, dataType: DataType, args: Column*): Column =
+    graftshim.column(StaticInvoke(cls, dataType, fn, args.map(graftshim.expression),
+      propagateNull = true, returnNullable = false))
+
+  /** a scalar argument as a Catalyst literal (`functions.lit` would leave
+    * an unresolved node, which a SQL function builder never resolves) */
+  private[graft] def scalar(v: Any): Column = graftshim.column(Literal(v))
+
+  /** a constant table argument (see [[KernelTable]]) */
+  private def table(values: AnyRef): Column =
+    graftshim.column(Literal(new KernelTable(values), ObjectType(classOf[KernelTable[_]])))
+
+  private def ops(fn: String, dataType: DataType, args: Column*): Column =
+    kernel(OpsKernels.getClass, fn, dataType, args: _*)
+  private val Longs = ArrayType(LongType, containsNull = false)
+  private val Ints = ArrayType(IntegerType, containsNull = false)
+  private val Strings = ArrayType(StringType, containsNull = false)
+
+  /** comma-joined sliding token windows; distinct keeps first occurrences
+    * (array_distinct order) */
+  def tokenNgrams(c: Column, n: Int, distinct: Boolean = false): Column = {
+    require(n >= 1, s"n-gram size must be >= 1, got $n")
+    ops("tokenNgrams", Strings, c, scalar(n), scalar(distinct))
+  }
+  /** 16-byte routing keys per token window, render-free */
+  def tokenGramKeys(c: Column, n: Int, distinct: Boolean = false): Column = {
+    require(n >= 1, "gram size must be >= 1")
+    ops("tokenGramKeys", ArrayType(BinaryType, containsNull = false), c, scalar(n),
+      scalar(distinct))
+  }
+  /** every adjacent token pair packed into one long `(a << 32) | b` — the
+    * BPE pair-count key; token ids must be non-negative */
+  def tokenPairKeys(c: Column): Column = ops("tokenPairKeys", Longs, c)
+  /** distinct token-n-gram hits against the plan-baked sorted (hi, lo)
+    * pair table: the exact, zero-shuffle form of "render keys → explode →
+    * broadcast-probe → count" for benchmark-sized probe sets */
+  def countGramHits(c: Column, n: Int, table: Array[Long]): Column = {
+    require(n >= 1, "gram size must be >= 1")
+    require(table.length % 2 == 0, "pair table must hold (hi, lo) longs")
+    ops("countGramHits", LongType, c, scalar(n), this.table(table))
+  }
+  /** array<struct<chunk_off: bigint, frag: array<int>>> → the fragments'
+    * tokens concatenated in chunk_off order */
+  def assembleFragments(c: Column): Column = ops("assembleFragments", Ints, c)
+  /** one-pass stopword-argmax language ID; `stops` = the (en, es, de, fr)
+    * word lists in tie-break order */
+  def langId4(c: Column, stops: Array[Array[String]]): Column = {
+    require(stops.length == 4, "exactly (en, es, de, fr) stop lists")
+    val sets = stops.map { l =>
       val s = new java.util.HashSet[String](); l.foreach(s.add); s
     }
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.langId4(input.asInstanceOf[UTF8String], sets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setsRef = ctx.addReferenceObj("langSets", sets, "java.util.HashSet[]")
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.langId4($c, $setsRef)")
+    ops("langId4", StringType, c, table(sets))
   }
-  override protected def withNewChildInternal(c: Expression): LangId4 =
-    copy(child = c)
-  override def prettyName: String = "lang_id4"
-}
-
-/** `AssembleFragments(array<struct<chunk_off: bigint, frag: array<int>>>)
-  * -> array<int>` — sort-by-offset + concatenate in one codegen pass
-  * (see [[OpsKernels.assembleFragments]]). */
-case class AssembleFragments(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.assembleFragments(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.assembleFragments($c)")
-  override protected def withNewChildInternal(c: Expression): AssembleFragments =
-    copy(child = c)
-  override def prettyName: String = "assemble_fragments"
-}
-
-case class TokenPairKeys(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.tokenPairKeys(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.tokenPairKeys($c)")
-  override protected def withNewChildInternal(c: Expression): TokenPairKeys = copy(child = c)
-  override def prettyName: String = "token_pair_keys"
-}
-
-/** `BpeMergePair(tokens array<int>, a, b, newId) -> array<int>` (a, b,
-  * newId literals): ONE greedy left-to-right non-overlapping merge pass —
-  * every occurrence of adjacent (a, b) in the ORIGINAL sequence becomes
-  * `newId`, a consumed position can't start another merge (classic BPE
-  * round semantics: in `aaa` with pair (a,a), only position 0 merges). */
-case class BpeMergePair(child: Expression, a: Int, b: Int, newId: Int)
-    extends UnaryExpression {
-  require(a >= 0 && b >= 0 && newId >= 0, "token ids must be non-negative")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.bpeMergePair(input.asInstanceOf[ArrayData], a, b, newId)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.bpeMergePair($c, $a, $b, $newId)")
-  override protected def withNewChildInternal(c: Expression): BpeMergePair = copy(child = c)
-  override def prettyName: String = "bpe_merge_pair"
-}
-
-/** `RangeBucket(value double, los, his) -> int` — O(log m) interval
-  * lookup against a literal sorted non-overlapping [lo, hi) table
-  * shipped via codegen reference arrays; -1 on gap/out-of-range. The
-  * join-free core of [[RangeLookup]]: Spark's own plan for a range
-  * predicate against a broadcast dimension is a BroadcastNestedLoop
-  * scanning all m intervals per row. */
-case class RangeBucket(child: Expression, los: Array[Double],
-    his: Array[Double]) extends UnaryExpression {
-  require(los.length == his.length, "parallel interval arrays required")
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.rangeBucket(input.asInstanceOf[Double], los, his)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val losRef = ctx.addReferenceObj("rangeLos", los, "double[]")
-    val hisRef = ctx.addReferenceObj("rangeHis", his, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.OpsKernels.rangeBucket($c, $losRef, $hisRef)")
+  /** ONE greedy left-to-right non-overlapping merge pass: each adjacent
+    * (a, b) of the input becomes `newId`; a consumed position cannot start
+    * another merge (in `aaa` with pair (a, a), only position 0 merges) */
+  def bpeMergePair(c: Column, a: Int, b: Int, newId: Int): Column = {
+    require(a >= 0 && b >= 0 && newId >= 0, "token ids must be non-negative")
+    ops("bpeMergePair", Ints, c, scalar(a), scalar(b), scalar(newId))
   }
-  override protected def withNewChildInternal(c: Expression): RangeBucket = copy(child = c)
-  override def prettyName: String = "range_bucket"
-}
-
-/** `BpeMergeAll(tokens array<int>, rules) -> array<int>` — the frozen
-  * merge TABLE applied in training order, one interpreted loop per row
-  * (the 50k-rule production encode, where chaining one generated
-  * [[BpeMergePair]] per rule would blow the codegen method/constant
-  * budget). `rules` = flat (a, b, newId) triples, a plan literal shipped
-  * via the codegen reference array — never a join side. */
-case class BpeMergeAll(child: Expression, rules: Array[Int])
-    extends UnaryExpression {
-  require(rules.length % 3 == 0, "rules must be flat (a, b, newId) triples")
-  require(rules.forall(_ >= 0), "token ids must be non-negative")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.bpeMergeAll(input.asInstanceOf[ArrayData], rules)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rulesRef = ctx.addReferenceObj("bpeRules", rules, "int[]")
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.bpeMergeAll($c, $rulesRef)")
+  /** the frozen merge table applied in training order in one loop per row
+    * (a 50k-rule table chained as bpeMergePair calls would blow the codegen
+    * method budget) */
+  def bpeMergeAll(c: Column, rules: Seq[(Int, Int, Int)]): Column = {
+    val flat = rules.flatMap { case (a, b, n) => Seq(a, b, n) }.toArray
+    require(flat.length % 3 == 0, "rules must be flat (a, b, newId) triples")
+    require(flat.forall(_ >= 0), "token ids must be non-negative")
+    ops("bpeMergeAll", Ints, c, table(flat))
   }
-  override protected def withNewChildInternal(c: Expression): BpeMergeAll = copy(child = c)
-  override def prettyName: String = "bpe_merge_all"
-}
-
-/** `TokenNgrams(tokens array<int>, n, distinct) -> array<string>` (n,
-  * distinct literal): comma-joined sliding token windows in one codegen'd
-  * pass; distinct=true keeps first occurrences (array_distinct order). */
-case class TokenNgrams(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
-  require(n >= 1, s"n-gram size must be >= 1, got $n")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.tokenNgrams(input.asInstanceOf[ArrayData], n, distinct)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.tokenNgrams($c, $n, $distinct)")
-  override protected def withNewChildInternal(c: Expression): TokenNgrams = copy(child = c)
-  override def prettyName: String = "token_ngrams"
-}
-
-/** `TokenGramKeys(tokens array<int>, n, distinct) -> array<binary>`:
-  * 16-byte routing keys per token window, render-free (see
-  * [[OpsKernels.tokenGramKeys]]). */
-case class TokenGramKeys(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
-  require(n >= 1, "gram size must be >= 1")
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    OpsKernels.tokenGramKeys(input.asInstanceOf[ArrayData], n, distinct)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.ops.OpsKernels.tokenGramKeys($c, $n, $distinct)")
-  override protected def withNewChildInternal(c: Expression): TokenGramKeys = copy(child = c)
-  override def prettyName: String = "token_gram_keys"
-}
-
-object opscol {
-  def tokenNgrams(c: Column, n: Int, distinct: Boolean = false): Column =
-    graftshim.column(TokenNgrams(graftshim.expression(c), n, distinct))
-  def tokenGramKeys(c: Column, n: Int, distinct: Boolean = false): Column =
-    graftshim.column(TokenGramKeys(graftshim.expression(c), n, distinct))
-  def tokenPairKeys(c: Column): Column =
-    graftshim.column(TokenPairKeys(graftshim.expression(c)))
-  def countGramHits(c: Column, n: Int, table: Array[Long]): Column =
-    graftshim.column(CountGramHits(graftshim.expression(c), n, table))
-  def assembleFragments(c: Column): Column =
-    graftshim.column(AssembleFragments(graftshim.expression(c)))
-  def langId4(c: Column, stops: Array[Array[String]]): Column =
-    graftshim.column(LangId4(graftshim.expression(c), stops))
-  def bpeMergePair(c: Column, a: Int, b: Int, newId: Int): Column =
-    graftshim.column(BpeMergePair(graftshim.expression(c), a, b, newId))
-  def bpeMergeAll(c: Column, rules: Seq[(Int, Int, Int)]): Column =
-    graftshim.column(BpeMergeAll(graftshim.expression(c),
-      rules.flatMap { case (a, b, n) => Seq(a, b, n) }.toArray))
-  def rangeBucket(c: Column, los: Array[Double], his: Array[Double]): Column =
-    graftshim.column(RangeBucket(graftshim.expression(c), los, his))
-  def simhash64(c: Column): Column =
-    graftshim.column(SimHash64(graftshim.expression(c)))
-  def minhashSig(c: Column, k: Int): Column =
-    graftshim.column(MinHashSig(graftshim.expression(c), k))
-  def cosineSimF(a: Column, b: Column): Column =
-    graftshim.column(CosineSimF(graftshim.expression(a), graftshim.expression(b)))
-  def cosineSimD(a: Column, b: Column): Column =
-    graftshim.column(CosineSimD(graftshim.expression(a), graftshim.expression(b)))
-  def jaccardPct(a: Column, b: Column): Column =
-    graftshim.column(JaccardPct(graftshim.expression(a), graftshim.expression(b)))
-  def hyperplaneSig(c: Column, planes: Int): Column =
-    graftshim.column(HyperplaneSig(graftshim.expression(c), planes))
-  def hyperplaneBandChunks(c: Column, planes: Int, bands: Int): Column =
-    graftshim.column(HyperplaneBandChunks(graftshim.expression(c), planes, bands))
+  /** index of the sorted, non-overlapping [lo, hi) interval holding the
+    * double value, or -1: O(log m) per row, where Spark plans the range
+    * predicate against a broadcast dimension as a nested-loop join */
+  def rangeBucket(c: Column, los: Array[Double], his: Array[Double]): Column = {
+    require(los.length == his.length, "parallel interval arrays required")
+    ops("rangeBucket", IntegerType, c, table(los), table(his))
+  }
+  def simhash64(c: Column): Column = ops("simhash64", LongType, c)
+  def minhashSig(c: Column, k: Int): Column = ops("minhash", Longs, c, scalar(k))
+  def cosineSimF(a: Column, b: Column): Column = ops("cosineF", DoubleType, a, b)
+  /** cosineSimF over array<double> inputs */
+  def cosineSimD(a: Column, b: Column): Column = ops("cosineD", DoubleType, a, b)
+  /** floor(100·|a∩b| / |a∪b|) over two string arrays as sets */
+  def jaccardPct(a: Column, b: Column): Column = ops("jaccardPct", LongType, a, b)
+  /** packed `planes`-bit random-hyperplane signature (planes ≤ 64) */
+  def hyperplaneSig(c: Column, planes: Int): Column = {
+    require(planes > 0 && planes <= 64, s"planes must be in [1,64], got $planes")
+    ops("hyperplaneSig", LongType, c, scalar(planes))
+  }
+  /** banded LSH chunks: chunk b packs the sign bits of planes
+    * [b·per, (b+1)·per) of the same plane matrix as hyperplaneSig, so for
+    * planes ≤ 64 it equals chunk b of the packed signature; the plane count
+    * is unlimited */
+  def hyperplaneBandChunks(c: Column, planes: Int, bands: Int): Column = {
+    require(planes > 0 && bands > 0 && planes % bands == 0,
+      s"bands must divide planes, got planes=$planes bands=$bands")
+    require(planes / bands <= 64, s"per-band chunk must fit a long, got ${planes / bands} bits")
+    ops("hyperplaneBandChunks", Longs, c, scalar(planes), scalar(bands))
+  }
+  /** LSH band-bucket hashes straight from the minhash signature longs */
   def minhashBands(c: Column, bands: Int): Column =
-    graftshim.column(MinHashBands(graftshim.expression(c), bands))
-  def wordShingles(c: Column, n: Int): Column =
-    graftshim.column(WordShingles(graftshim.expression(c), n))
-
-  def wordNgramsMulti(c: Column, n: Int): Column =
-    graftshim.column(WordNgramsMulti(graftshim.expression(c), n))
-  def charEntropy(c: Column): Column =
-    graftshim.column(CharEntropy(graftshim.expression(c)))
-  def tokenEntropy(c: Column): Column =
-    graftshim.column(TokenEntropy(graftshim.expression(c)))
+    ops("minhashBands", Longs, c, scalar(bands))
+  /** normalized distinct word n-gram shingles in one pass */
+  def wordShingles(c: Column, n: Int): Column = {
+    require(n >= 1, "shingle size must be >= 1")
+    ops("wordShingles", Strings, c, scalar(n))
+  }
+  /** in-order word n-grams with multiplicity; < n words ⇒ empty array */
+  def wordNgramsMulti(c: Column, n: Int): Column = {
+    require(n >= 1, "ngram size must be >= 1")
+    ops("wordNgramsMulti", Strings, c, scalar(n))
+  }
+  /** Shannon entropy (nats) of the string's codepoint distribution: a
+    * narrow projection, where the explode → groupBy form shuffles twice */
+  def charEntropy(c: Column): Column = ops("charEntropy", DoubleType, c)
+  /** Shannon entropy (nats) of the sequence's token-id distribution */
+  def tokenEntropy(c: Column): Column = ops("intArrayEntropy", DoubleType, c)
 }

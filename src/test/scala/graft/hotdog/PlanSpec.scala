@@ -101,12 +101,12 @@ class PlanSpec extends AnyFunSuite {
         "merge_invalid_json", "merge_target_not_json", "batch_id")
       .collect().map(r => (Option(r.getString(0)), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
-    // default mode: observe (single pass)
+    // single pass: the audit is observed on the sink write
     Pipeline.writeBatch(routed, s"$tmp/out-obs", s"$tmp/audit-obs", 3L)
-    // reference: two-pass recompute audit
-    spark.conf.set("spark.graft.writeBatch.mode", "twopass")
-    try Pipeline.writeBatch(routed, s"$tmp/out-ref", s"$tmp/audit-ref", 3L)
-    finally spark.conf.unset("spark.graft.writeBatch.mode")
+    // reference: two passes — the fan-out write, then the DataFrame
+    // aggregation audit over a second evaluation of the cascade
+    Pipeline.writeFanOut(routed, s"$tmp/out-ref", 3L)
+    Pipeline.writeAudit(routed, s"$tmp/audit-ref", 3L)
     val obs = auditRows(s"$tmp/audit-obs")
     val ref = auditRows(s"$tmp/audit-ref")
     assert(obs == ref, s"observed audit != recomputed audit\nobs=$obs\nref=$ref")

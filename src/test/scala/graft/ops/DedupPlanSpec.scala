@@ -94,7 +94,8 @@ class DedupPlanSpec extends AnyFunSuite {
         "doc_id", "tokens", 3, 5),
       "spanDupStats" -> Contamination.spanDupStats(docs, "doc_id", "text"))
     for ((tag, df) <- plans;
-         needle <- Seq("minhash_sig", "token_ngrams", "word_shingles")) {
+         needle <- Seq("OpsKernels.minhash(", "OpsKernels.tokenNgrams(",
+           "OpsKernels.wordShingles(")) {
       val filterLines = df.queryExecution.optimizedPlan.toString()
         .linesIterator.filter(_.contains("Filter")).toSeq
       assert(!filterLines.exists(_.contains(needle)),
@@ -162,5 +163,14 @@ class DedupPlanSpec extends AnyFunSuite {
     // partitioned by query_id, never global
     val windows = phys.linesIterator.filter(_.contains("Window ")).toList
     assert(windows.nonEmpty && windows.forall(_.contains("query_id")), phys)
+  }
+
+  test("stream queries leave the session conf as they found it") {
+    // they narrow shuffle width and turn checkpoint checksums off while
+    // the stream runs; both must be restored (an unset conf stays unset)
+    val before = spark.conf.getAll.toSet
+    graft.SparkEntry.queries("hd_window")(spark, sf).collect()
+    val after = spark.conf.getAll.toSet
+    assert(after == before, s"set: ${after -- before}, lost: ${before -- after}")
   }
 }

@@ -233,8 +233,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("rangeBucket kernel: boundaries inclusive-lo exclusive-hi, gaps, out of range") {
-    val los = Array(0.0, 10.0, 50.0)
-    val his = Array(10.0, 20.0, 60.0)
+    val los = new KernelTable(Array(0.0, 10.0, 50.0))
+    val his = new KernelTable(Array(10.0, 20.0, 60.0))
     import graft.ops.OpsKernels.rangeBucket
     assert(rangeBucket(0.0, los, his) == 0)   // lo inclusive
     assert(rangeBucket(9.999, los, his) == 0)
@@ -600,7 +600,7 @@ class OpsSpec extends AnyFunSuite {
 
   test("langId kernel ≡ the stopword-score when-chain it replaced (ties, empties, nulls)") {
     // the r5 Column form, verbatim — the differential oracle for the
-    // one-pass LangId4 kernel
+    // one-pass langId4 kernel
     def chain(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
       val en = TextAnalysis.stopwordScore(text, "en")
       val es = TextAnalysis.stopwordScore(text, "es")
@@ -851,5 +851,129 @@ class OpsSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString()
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
+  }
+
+  // ---- kernels as StaticInvoke expressions ------------------------------
+
+  test("kernels built from equal but distinct tables are semanticEquals") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val df = Seq((Seq(1, 2, 3), "the text", 1.0)).toDF("tokens", "text", "v")
+    def analyzed(a: Column, b: Column): (Expression, Expression) =
+      df.select(a.as("a"), b.as("b")).queryExecution.analyzed match {
+        case Project(Seq(x: Alias, y: Alias), _) => (x.child, y.child)
+        case other => fail(other.toString)
+      }
+    def same(a: Column, b: Column) = {
+      val (x, y) = analyzed(a, b)
+      assert(x.semanticEquals(y) && x.semanticHash() == y.semanticHash(), s"$x vs $y")
+    }
+    val t = col("tokens")
+    val table = Array(1L, 2L, 3L, 4L)
+    same(opscol.countGramHits(t, 2, table), opscol.countGramHits(t, 2, table.clone()))
+    same(opscol.rangeBucket(col("v"), Array(0.0, 10.0), Array(10.0, 20.0)),
+      opscol.rangeBucket(col("v"), Array(0.0, 10.0), Array(10.0, 20.0)))
+    same(opscol.bpeMergeAll(t, Seq((1, 2, 9), (9, 3, 10))),
+      opscol.bpeMergeAll(t, Seq((1, 2, 9), (9, 3, 10))))
+    def stops = Array(Array("the"), Array("el"), Array("der"), Array("le"))
+    same(opscol.langId4(col("text"), stops), opscol.langId4(col("text"), stops))
+    // and a different table is a different expression
+    val (x, y) = analyzed(opscol.countGramHits(t, 2, table),
+      opscol.countGramHits(t, 2, Array(1L, 2L, 3L, 5L)))
+    assert(!x.semanticEquals(y))
+  }
+
+  test("every kernel: interpreted eval == generated code, null input included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rows = docs.collect().map { r =>
+      val text = r.getString(1)
+      val tokens = text.codePoints.toArray.toSeq
+      val vec = tokens.take(8).map(t => (t % 7 - 3).toFloat)
+      val frags = tokens.grouped(3).zipWithIndex
+        .map { case (g, i) => Row(3L * i, g) }.toSeq.reverse
+      Row(text, text.split(" ").toSeq, tokens, vec, vec.map(_.toDouble),
+        r.getLong(0) * 7.5, frags, Seq(-1L, r.getLong(0)), r.getLong(0))
+    }.toSeq :+ Row(Seq.fill(9)(null): _*)
+    val schema = StructType(Seq(
+      StructField("text", StringType), StructField("words", ArrayType(StringType)),
+      StructField("tokens", ArrayType(IntegerType)), StructField("vec", ArrayType(FloatType)),
+      StructField("vecd", ArrayType(DoubleType)), StructField("v", DoubleType),
+      StructField("frags", ArrayType(StructType(Seq(StructField("chunk_off", LongType),
+        StructField("frag", ArrayType(IntegerType)))))),
+      StructField("bits", ArrayType(LongType)), StructField("h", LongType)))
+    // an RDD source: a local relation would be constant-folded
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val gramTable = OpsKernels.keyPairTable(OpsKernels.tokenGramKeys(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        "the quick".codePoints.toArray.map(Int.box)), 2, distinct = true)
+      .toArray[Array[Byte]](BinaryType))
+    val t = col("tokens")
+    val kernels = Seq(
+      "codepointsToString" -> graft.hotdog.exprs.codepointsToString(t),
+      "stringToCodepoints" -> graft.hotdog.exprs.stringToCodepoints(col("text")),
+      "handlebarsEscape" -> graft.hotdog.exprs.handlebarsEscape(col("text")),
+      "bloomMightContain" -> Bloom.mightContain(col("bits"), col("h"), 3),
+      "tokenNgrams" -> opscol.tokenNgrams(t, 2),
+      "tokenNgramsDistinct" -> opscol.tokenNgrams(t, 2, distinct = true),
+      "tokenGramKeys" -> opscol.tokenGramKeys(t, 2, distinct = true),
+      "tokenPairKeys" -> opscol.tokenPairKeys(t),
+      "countGramHits" -> opscol.countGramHits(t, 2, gramTable),
+      "assembleFragments" -> opscol.assembleFragments(col("frags")),
+      "langId4" -> opscol.langId4(col("text"),
+        Array(Array("the"), Array("el", "la"), Array("der", "die"), Array("le"))),
+      "bpeMergePair" -> opscol.bpeMergePair(t, 't'.toInt, 'h'.toInt, 1000),
+      "bpeMergeAll" -> opscol.bpeMergeAll(t, Seq(('t'.toInt, 'h'.toInt, 1000),
+        (1000, 'e'.toInt, 1001))),
+      "rangeBucket" -> opscol.rangeBucket(col("v"), Array(0.0, 10.0, 50.0),
+        Array(10.0, 20.0, 60.0)),
+      "simhash64" -> opscol.simhash64(col("words")),
+      "minhashSig" -> opscol.minhashSig(col("words"), 8),
+      "minhashBands" -> opscol.minhashBands(opscol.minhashSig(col("words"), 8), 4),
+      "cosineSimF" -> opscol.cosineSimF(col("vec"), reverse(col("vec"))),
+      "cosineSimD" -> opscol.cosineSimD(col("vecd"), reverse(col("vecd"))),
+      "jaccardPct" -> opscol.jaccardPct(col("words"), array(lit("the"), lit("quick"))),
+      "hyperplaneSig" -> opscol.hyperplaneSig(col("vec"), 16),
+      "hyperplaneBandChunks" -> opscol.hyperplaneBandChunks(col("vec"), 16, 4),
+      "wordShingles" -> opscol.wordShingles(col("text"), 2),
+      "wordNgramsMulti" -> opscol.wordNgramsMulti(col("text"), 2),
+      "charEntropy" -> opscol.charEntropy(col("text")),
+      "tokenEntropy" -> opscol.tokenEntropy(t))
+    def norm(v: Any): Any = v match {
+      case b: Array[Byte] => b.toSeq
+      case s: scala.collection.Seq[_] => s.map(norm)
+      case other => other
+    }
+    def run(mode: String): Seq[Map[String, Any]] =
+      graft.hotdog.Pipeline.withConf(spark, "spark.sql.codegen.factoryMode" -> mode,
+          "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString) {
+        val out = df.select(col("text") +: kernels.map { case (n, c) => c.as(n) }: _*)
+        val plan = out.queryExecution.executedPlan.toString
+        assert(plan.contains("*(") == (mode == "CODEGEN_ONLY"), plan)
+        out.collect().toSeq.map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+          .map { case (k, v) => k -> norm(v) })
+      }
+    val interpreted = run("NO_CODEGEN")
+    val generated = run("CODEGEN_ONLY")
+    assert(interpreted.length == docs.count() + 1)
+    for ((i, g) <- interpreted.zip(generated); (name, _) <- kernels)
+      assert(i(name) == g(name),
+        s"$name on ${i("text")}: interpreted ${i(name)} != generated ${g(name)}")
+    for (r <- interpreted; (name, _) <- kernels)
+      assert((r(name) == null) == (r("text") == null), s"$name on ${r("text")}: ${r(name)}")
+  }
+
+  test("assembleFragments: 8192 one-token fragments in reverse offset order") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    def frags(offs: Seq[Int]) = new GenericArrayData(offs.map(o =>
+      InternalRow(o.toLong, new GenericArrayData(Array[Any](o)))).toArray[Any])
+    val n = 8192
+    val out = OpsKernels.assembleFragments(frags((0 until n).reverse)).toIntArray()
+    assert(out.toSeq == (0 until n))
+    // a handful of fragments, the usual case
+    assert(OpsKernels.assembleFragments(frags(Seq(5, 1, 3))).toIntArray().toSeq ==
+      Seq(1, 3, 5))
   }
 }

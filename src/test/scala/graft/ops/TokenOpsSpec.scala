@@ -105,7 +105,7 @@ class TokenOpsSpec extends AnyFunSuite {
       array(lit(1), lit(2), (col("id") % 7).cast("int"), lit(4)).as("tokens"))
     val planOut = TokenOps.tokenContaminated(trainR, evalSet, "doc_id", "tokens", n = 2)
     val plan = planOut.queryExecution.executedPlan.toString()
-    assert(plan.contains("count_gram_hits"), plan)
+    assert(plan.contains("OpsKernels.countGramHits("), plan)
     assert(!plan.contains("Exchange"), plan)
     assert(!plan.contains("Join"), plan)
     assert(!plan.contains("Generate"), plan)

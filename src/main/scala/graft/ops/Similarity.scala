@@ -120,8 +120,8 @@ object Similarity {
   }
 
   /** the narrow (query_id, neighbor_id, sim) candidate frame [[ivfTopK]]
-    * ranks — exposed for the rank-idiom A/B bench (RankAbBench). */
-  private[ops] def ivfScored(corpus: DataFrame, queries: DataFrame,
+    * ranks */
+  private def ivfScored(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, nlist: Int, nprobe: Int,
       centroids: Option[DataFrame]): DataFrame = {
     requireNumericId(corpus, idCol, "ivfTopK id column")

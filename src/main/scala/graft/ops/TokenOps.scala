@@ -170,9 +170,24 @@ object TokenOps {
     * side is a single ZERO-SHUFFLE pass: no gram explode, no broadcast
     * hash probe, no re-aggregate; corpus token grams never materialize
     * as rows at all.
+    *
+    * Output: (idCol, n_shared), one row per contaminated TRAIN ROW. idCol
+    * is carried through, not grouped on, so it must be unique in `train`
+    * for the output to hold one row per id. The eval set's distinct gram
+    * keys are collected to the driver; more than [[EvalGramKeyBound]] of
+    * them fails loudly instead of exhausting the driver.
     */
   def tokenContaminated(train: DataFrame, evalSet: DataFrame, idCol: String,
-      tokensCol: String, n: Int): DataFrame = {
+      tokensCol: String, n: Int): DataFrame =
+    tokenContaminated(train, evalSet, idCol, tokensCol, n, EvalGramKeyBound)
+
+  /** Most distinct eval gram keys [[tokenContaminated]] bakes into its probe
+    * table: 16 bytes each on the driver and in every task's plan, so 16 MB
+    * at the bound — a benchmark suite's size, not a corpus's. */
+  private val EvalGramKeyBound: Int = 1 << 20
+
+  private[ops] def tokenContaminated(train: DataFrame, evalSet: DataFrame,
+      idCol: String, tokensCol: String, n: Int, keyBound: Int): DataFrame = {
     // Eval benchmarks are tiny by the decontamination contract (the same
     // bound that let contaminatedGrams BROADCAST them), so collect the
     // distinct eval gram keys once and bake the probe into ONE codegen
@@ -190,8 +205,12 @@ object TokenOps {
       .select(explode(
         opscol.tokenGramKeys(col(tokensCol), n, distinct = true)).as("_g"))
       .distinct()
+      .limit(keyBound + 1)
       .collect()
       .map(_.getAs[Array[Byte]](0))
+    require(keys.length <= keyBound,
+      s"tokenContaminated: the eval set (${evalSet.count()} rows) has more than " +
+        s"$keyBound distinct $n-gram keys; it must be benchmark-sized")
     val table = OpsKernels.keyPairTable(keys)
     train
       .select(col(idCol),

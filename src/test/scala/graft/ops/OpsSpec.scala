@@ -405,10 +405,10 @@ class OpsSpec extends AnyFunSuite {
     assert(out.map(_.getLong(0)).toSeq == Seq(100L, 0L, 66L, 0L, 100L, 0L))
   }
 
-  test("DedupScalingBench planted corpus: exact recall accounting at 20k docs") {
+  test("dedup campaign planted corpus: exact recall accounting at 20k docs") {
     val spark = docs.sparkSession
     val n = 20000L
-    val c = DedupScalingBench.corpus(spark, n, parts = 8)
+    val c = graft.scaling.DedupCampaign.docs(spark, n, parts = 8)
     val pairs = Dedup.minhashNearDups(c, "doc_id", "text", 60, 64, 32, 3, None)
       .collect()
     val planted = pairs.filter(r =>

@@ -132,6 +132,20 @@ class TokenOpsSpec extends AnyFunSuite {
     assert(out == naive)
   }
 
+  test("tokenContaminated: an eval set past the key bound fails loudly, naming its size") {
+    val train = Seq(("t1", Seq(1, 2, 3))).toDF("doc_id", "tokens")
+    // 2 rows, 4 distinct 2-grams: 1,2 2,3 3,4 and 9,9
+    val evalSet = Seq(("e1", Seq(1, 2, 3, 4)), ("e2", Seq(9, 9)))
+      .toDF("doc_id", "tokens")
+    val e = intercept[IllegalArgumentException](
+      TokenOps.tokenContaminated(train, evalSet, "doc_id", "tokens", n = 2, keyBound = 3))
+    assert(e.getMessage.contains("(2 rows)") && e.getMessage.contains("more than 3"),
+      e.getMessage)
+    // at the bound the probe is built and exact
+    val out = TokenOps.tokenContaminated(train, evalSet, "doc_id", "tokens", n = 2, keyBound = 4)
+    assert(out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == Map("t1" -> 2L))
+  }
+
   // ---- scrubDupSpans / scrubTokens ----------------------------------------
 
   test("scrubDupSpans: overlap merge, within-doc repeats count, totality") {

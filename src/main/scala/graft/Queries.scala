@@ -473,10 +473,6 @@ object Queries {
   private def streamEventsPath(dir: String): String =
     s"/dev/shm/graft-evstream-${dir.replaceAll("[^A-Za-z0-9._-]", "_")}/in"
 
-  /** per-query tmpfs checkpoint dir (fresh per run — memory-sink queries
-    * otherwise checkpoint to a java.io.tmpdir temp on the virtio disk) */
-  private def ckptPath(sink: String): String = s"/dev/shm/graft-ckpt-$sink"
-
   /** Scale-adaptive stateful-stream shuffle sizing (optimization guide §2:
     * derive partitioning from the data, never a core-count constant). A
     * stateful operator's state-store partition count is FROZEN at the first
@@ -505,14 +501,21 @@ object Queries {
     * keeps the session's own configuration. Output is
     * partitioning-independent for every caller (aggregates, joins, or
     * key-projected dedup), so results are bit-identical — the oracle
-    * compare pins that. */
+    * compare pins that.
+    *
+    * `body` gets the stream's checkpoint directory: a fresh tmpfs dir per
+    * run (memory-sink queries otherwise checkpoint to a java.io.tmpdir
+    * temp on the virtio disk), deleted once `body` returns — the memory
+    * sink holds the result, the terminated stream needs no checkpoint. */
   private def withStreamParallelism[T](spark: SparkSession,
-      filesPerTrigger: Int)(body: => T): T = {
+      filesPerTrigger: Int, sink: String)(body: String => T): T = {
     val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val target = math.max(1, math.min(width, filesPerTrigger))
-    graft.hotdog.Pipeline.withConf(spark,
+    val ckpt = s"/dev/shm/graft-ckpt-$sink"
+    try graft.hotdog.Pipeline.withConf(spark,
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> target.toString)(body)
+      "spark.sql.shuffle.partitions" -> target.toString)(body(ckpt))
+    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
   }
 
   /** The STREAMING path through the driver contract: sequences stream →
@@ -527,12 +530,12 @@ object Queries {
     streamInput(spark, dir, in)
     val sink = s"hd_window_sink_${System.nanoTime()}"
     // single trigger ingests all 8 staged files — state width follows it
-    withStreamParallelism(spark, filesPerTrigger = 8) {
+    withStreamParallelism(spark, filesPerTrigger = 8, sink) { ckpt =>
       val stream = spark.readStream.schema(spark.read.parquet(in).schema).parquet(in)
       val counts = graft.hotdog.Streaming.windowedTopicCounts(
         stream, Configs.flagship, windowLen = "1 hour", lateness = "10 minutes")
       val q = counts.writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckptPath(sink))
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -553,13 +556,13 @@ object Queries {
     val in = streamInputPath(dir)
     streamInput(spark, dir, in)
     val sink = s"hd_state_sink_${System.nanoTime()}"
-    withStreamParallelism(spark, filesPerTrigger = 4) {
+    withStreamParallelism(spark, filesPerTrigger = 4, sink) { ckpt =>
       val stream = spark.readStream.schema(spark.read.parquet(in).schema)
         .option("maxFilesPerTrigger", 4).parquet(in)
       val totals = graft.hotdog.Streaming.runningTopicTotals(stream, Configs.flagship)
         .toDF("topic", "n")
       val q = totals.writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckptPath(sink))
+        .option("checkpointLocation", ckpt)
         .outputMode("update")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -586,7 +589,7 @@ object Queries {
     val in = streamInputPath(dir)
     streamInput(spark, dir, in)
     val sink = s"dd_stream_dedup_sink_${System.nanoTime()}"
-    withStreamParallelism(spark, filesPerTrigger = 4) {
+    withStreamParallelism(spark, filesPerTrigger = 4, sink) { ckpt =>
       val stream = spark.readStream.schema(spark.read.parquet(in).schema)
         .option("maxFilesPerTrigger", 4).parquet(in)
       val parsed = Router.parsed(Router.decoded(stream))
@@ -597,7 +600,7 @@ object Queries {
         parsed, Seq("hostname", "appname"), "event_time", "3650 days")
       val q = deduped.select("hostname", "appname")
         .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckptPath(sink))
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -621,7 +624,7 @@ object Queries {
     streamEventsInput(spark, dir, in)
     val schema = spark.read.parquet(in).schema
     val sink = s"ev_stream_join_sink_${System.nanoTime()}"
-    withStreamParallelism(spark, filesPerTrigger = 4) {
+    withStreamParallelism(spark, filesPerTrigger = 4, sink) { ckpt =>
       def rd = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 4).parquet(in)
       val purchases = rd.filter(col("event_type") === "purchase")
@@ -637,7 +640,7 @@ object Queries {
         .select(col("purchase_id"), col("touch_id"),
           (unix_micros(col("pt")) - unix_micros(col("tt"))).as("lag_us"))
         .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", ckptPath(sink))
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -1046,9 +1049,9 @@ object Queries {
     // 6 slices / 3 per trigger = 2 data batches + the timeout flush —
     // cross-batch state is exercised while the ~1.4 s/stateful-batch
     // machinery floor stays amortized (SessionizeSpec drives 5 batches)
-    withStreamParallelism(spark, filesPerTrigger = 3) {
+    withStreamParallelism(spark, filesPerTrigger = 3, sink) { ckpt =>
       graft.ops.Sessionize.runStreamSessions(spark, in,
-        gapSec = 21600L, lateness = "1 hour", checkpoint = ckptPath(sink),
+        gapSec = 21600L, lateness = "1 hour", checkpoint = ckpt,
         maxFilesPerTrigger = 3)
     }.orderBy("user_id", "t_start_us")
   }

@@ -2,9 +2,6 @@ package graft.hotdog
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode, JsonNodeFactory}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{DataType, StringType, StructType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** hotdog's JSON deep-merge semantics (reference src/merge.rs:69-88, itself
@@ -78,7 +75,7 @@ object HotdogJson {
     else if (n.isBoolean) "boolean"
     else "null"
 
-  /** codegen entry for JsonFieldProfile: the top-level fields of a JSON
+  /** kernel of [[exprs.jsonFieldProfile]]: the top-level fields of a JSON
     * OBJECT document as (key, vtype) entries — vtype ∈ {object, array,
     * string, number, boolean, null}. Anything that is not a valid JSON
     * object (malformed under serde rules, a non-object root, or a null
@@ -105,7 +102,7 @@ object HotdogJson {
     new GenericArrayData(out)
   }
 
-  /** codegen entry for JsonHotdogMerge: null iff msg is not valid JSON. */
+  /** kernel of [[exprs.jsonHotdogMerge]]: null iff msg is not valid JSON. */
   def mergeEval(msg: UTF8String, rhs: UTF8String): UTF8String = {
     val out = performMerge(msg.toString, rhs.toString)
     if (out == null) null else UTF8String.fromString(out)
@@ -117,12 +114,13 @@ object HotdogJson {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](false, null))
 
-  /** codegen entry for JmesPathEval: full-JMESPath search (see [[Jmes]]).
-    * A rule matches iff the result is non-null (rules.rs:70-85); `value`
-    * is bound only for string results. Expressions whose shape provably
-    * cannot match a scalar root (the common `a.b.c` chains) skip the
-    * Jackson parse for non-container lines. */
+  /** kernel of [[exprs.jmespathEval]]: full-JMESPath search (see
+    * [[Jmes]]). A rule matches iff the result is non-null (rules.rs:70-85);
+    * `value` is bound only for string results; null JSON never matches.
+    * Expressions whose shape provably cannot match a scalar root (the
+    * common `a.b.c` chains) skip the Jackson parse for non-container lines. */
   def jmesEval(json: UTF8String, path: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
+    if (json == null) return NoMatchRow
     val p = path.toString
     var compiled = pathCache.get(p)
     if (compiled == null) {
@@ -413,7 +411,7 @@ object HotdogJson {
       // analog is failing the task, NOT returning null (which the router
       // would miscount as error.merge_of_invalid_json). This also makes
       // "null ⇔ msg not valid JSON" an exact contract, which the router's
-      // merge-error counters rely on (they test JsonValid(msg), letting the
+      // merge-error counters rely on (they test jsonValid(msg), letting the
       // stats plan prune the merge+serialize work entirely).
       throw new IllegalArgumentException(
         s"merge template rendered invalid JSON: $rhs")
@@ -421,11 +419,11 @@ object HotdogJson {
     serialize(merge(msgJson, toMerge))
   }
 
-  /** codegen entry for [[JsonValid]]: serde_json::from_str(s).is_ok(). */
+  /** kernel of [[exprs.jsonValid]]: serde_json::from_str(s).is_ok(). */
   def jsonValid(s: UTF8String): Boolean =
     s != null && parseOrNull(s.toString) != null
 
-  /** codegen entry for JsonHotdogMergeIn: null ⇔ either side isn't valid
+  /** kernel of [[exprs.jsonHotdogMergeIn]]: null ⇔ either side isn't valid
     * JSON or the pointer cannot be materialized (see [[mergeIn]]). */
   def mergeInEval(msg: UTF8String, ptr: UTF8String, rhs: UTF8String): UTF8String = {
     val root = parseOrNull(msg.toString)
@@ -435,189 +433,4 @@ object HotdogJson {
     try UTF8String.fromString(serialize(mergeIn(root, ptr.toString, add)))
     catch { case _: IllegalArgumentException => null }
   }
-}
-
-/** `JmesPathEval(json, 'a[0].b') -> struct<matched boolean, value string>`
-  * — the JMESPath access-chain subset (identifiers, quoted identifiers,
-  * index subscripts) used by hotdog configs (reference src/rules.rs:70-85):
-  *  - input not valid JSON → matched=false (silent, F5)
-  *  - path resolves to null / missing → matched=false
-  *  - path resolves to a JSON string → matched=true, value=that string
-  *  - path resolves to any other non-null value → matched=true, value=null
-  *    (the reference only exposes the `value` variable for string results)
-  */
-case class JmesPathEval(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("matched", org.apache.spark.sql.types.BooleanType, nullable = false),
-    StructField("value", StringType, nullable = true)))
-  override def nullable: Boolean = false
-  override def foldable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val l = left.eval(input)
-    if (l == null)
-      return new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](false, null))
-    HotdogJson.jmesEval(l.asInstanceOf[UTF8String],
-      right.eval(input).asInstanceOf[UTF8String])
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${l.code}
-        ${r.code}
-        InternalRow ${ev.value} = null;
-        if (${l.isNull}) {
-          ${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            new Object[]{false, null});
-        } else {
-          ${ev.value} = graft.hotdog.HotdogJson.jmesEval(${l.value}, ${r.value});
-        }""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JmesPathEval =
-    copy(left = l, right = r)
-  override def prettyName: String = "jmespath_eval"
-}
-
-/** `JsonValid(s) -> boolean` — whether `s` parses as a JSON document under
-  * serde_json rules (trailing tokens rejected, non-finite doubles rejected).
-  * Null input → false (never null). Parse-only: this is what the router's
-  * merge-error counters and cascade-kill conditions evaluate, so a stats
-  * query that never reads the merged OUTPUT prunes the merge+serialize
-  * work and pays one parse instead (round-4 bench fix for hd_stats). */
-case class JsonValid(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    HotdogJson.jsonValid(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.value} = graft.hotdog.HotdogJson.jsonValid(
-          ${c.isNull} ? null : ${c.value});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-  override protected def withNewChildInternal(newChild: Expression): JsonValid =
-    copy(child = newChild)
-  override def prettyName: String = "json_valid"
-}
-
-/** `JsonFieldProfile(s) -> array<struct<key:string, vtype:string>>` — the
-  * top-level field profile of a JSON object document (the schema-drift
-  * monitor's kernel): one entry per field with its JSON value type;
-  * malformed / non-object / null inputs profile as the single marker
-  * entry ("_malformed", "-"). Never null, never empty for invalid input —
-  * exploding the result yields a TOTAL per-row accounting in ONE parse
-  * (the two-pass alternative, json_valid + a keys builtin + per-key type
-  * probes, re-parses the document per field). */
-case class JsonFieldProfile(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
-    StructType(Seq(
-      StructField("key", StringType, nullable = false),
-      StructField("vtype", StringType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    HotdogJson.fieldProfile(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val c = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.hotdog.HotdogJson.fieldProfile(
-            ${c.isNull} ? null : ${c.value});""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-  override protected def withNewChildInternal(newChild: Expression): JsonFieldProfile =
-    copy(child = newChild)
-  override def prettyName: String = "json_field_profile"
-}
-
-/** `JsonHotdogMerge(msg, renderedMergeJson) -> string` — A3/A4 merge as a
-  * Catalyst expression. Returns null iff `msg` is not valid JSON (the
-  * cascade-kill signal; an invalid RENDERED template fails the task, as the
-  * reference's unwrap panics). Codegen via static helper so the router
-  * stays inside whole-stage codegen. */
-case class JsonHotdogMerge(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val l = left.eval(input)
-    if (l == null) return null
-    val r = right.eval(input)
-    if (r == null) return null
-    HotdogJson.mergeEval(l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${l.code}
-        boolean ${ev.isNull} = true;
-        UTF8String ${ev.value} = null;
-        if (!${l.isNull}) {
-          ${r.code}
-          if (!${r.isNull}) {
-            ${ev.value} = graft.hotdog.HotdogJson.mergeEval(${l.value}, ${r.value});
-            ${ev.isNull} = (${ev.value} == null);
-          }
-        }""")
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): JsonHotdogMerge =
-    copy(left = l, right = r)
-  override def prettyName: String = "json_hotdog_merge"
-}
-
-/** `JsonHotdogMergeIn(msg, pointer, rhs) -> string` — the reference's
-  * JSON-pointer-targeted merge (src/merge.rs:91-135, dead in its runtime,
-  * exposed as a SQL function here). Null iff msg/rhs aren't valid JSON or
-  * the pointer cannot be materialized. */
-case class JsonHotdogMergeIn(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(msg: Any, ptr: Any, rhs: Any): Any =
-    HotdogJson.mergeInEval(msg.asInstanceOf[UTF8String],
-      ptr.asInstanceOf[UTF8String], rhs.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (m, p, r) => {
-      s"""
-        ${ev.value} = graft.hotdog.HotdogJson.mergeInEval($m, $p, $r);
-        ${ev.isNull} = (${ev.value} == null);
-      """
-    })
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): JsonHotdogMergeIn =
-    copy(first = f, second = s, third = t)
-  override def prettyName: String = "json_hotdog_merge_in"
 }

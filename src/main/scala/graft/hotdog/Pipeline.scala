@@ -159,29 +159,14 @@ object Pipeline {
         col("err_merge_invalid_json").cast("long"),
         col("err_merge_target_not_json").cast("long")).as("lineage"))
     val micros = writeFanOut(observed, outDir, batchId, saltBuckets)
-    // the listener delivering observed metrics fires asynchronously
-    // just after the action returns — poll briefly, then fall back to
-    // an exact recompute (never silently skip the audit)
-    var m = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-    var waited = 0
-    while (m.isEmpty && waited < 10000) {
-      Thread.sleep(50); waited += 50
-      m = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-    }
-    m.get("lineage") match {
-      case Some(slots) => writeAuditRows(spark,
-        slots.asInstanceOf[scala.collection.Map[String, scala.collection.Seq[Long]]],
-        auditDir, batchId)
-      case None =>
-        // the exact-recompute fallback re-runs the FULL cascade — the
-        // double evaluation the observed audit exists to eliminate. Never
-        // silent (ADVICE r4): in a streaming bench this would
-        // invisibly double every batch's cost.
-        System.err.println(s"[graft-hotdog] WARN batch $batchId: " +
-          "observed lineage metrics not delivered within 10s; " +
-          "falling back to a full audit recompute (cascade runs twice)")
-        writeAudit(routed, auditDir, batchId)
-    }
+    // the exact-recompute fallback re-runs the FULL cascade — the double
+    // evaluation the observed audit exists to eliminate, so it is loud
+    // (ADVICE r4): in a streaming bench it would double every batch's cost
+    org.apache.spark.sql.graftshim.observedOr(obs, "lineage",
+        s"batch $batchId: falling back to a full audit recompute (cascade runs twice)") {
+      (slots: scala.collection.Map[String, scala.collection.Seq[Long]]) =>
+        writeAuditRows(spark, slots, auditDir, batchId)
+    }(writeAudit(routed, auditDir, batchId))
     micros
   }
 

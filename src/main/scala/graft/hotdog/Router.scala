@@ -65,7 +65,7 @@ object Router {
 
   /** line → 5-field parsed struct `p` (null = parse error). */
   def parsed(df: DataFrame): DataFrame =
-    df.withColumn("p", exprs.col(SyslogParse(exprs.expr(col("line")))))
+    df.withColumn("p", exprs.syslogParse(col("line")))
 
   /** Full pipeline projection: decode → parse → route. Input must have the
     * `sequences` shape; output adds line, parsed fields, topic, output and
@@ -77,7 +77,7 @@ object Router {
     // column is declared independently and only materializes when a
     // consumer reads it (column pruning drops it on the sink path)
     val withParsed = decoded(sequences)
-      .withColumn("p", exprs.col(SyslogParseTokens(exprs.expr(col("tokens")))))
+      .withColumn("p", exprs.syslogParseTokens(col("tokens")))
     routeParsed(withParsed, cfg, clock)
   }
 
@@ -103,20 +103,18 @@ object Router {
     }
 
     // ---- L3: hoisted matcher primitives, one column per rule (each runs
-    // its regex/jmespath engine exactly ONCE per row: RegexCaptures returns
+    // its regex/jmespath engine exactly ONCE per row: regexCaptures returns
     // matched + all named groups from a single find()) ----
     val matcherCols: Seq[(String, Column)] = cfg.rules.zipWithIndex.flatMap {
       case (rule, i) =>
         rule.jmespath match {
           case Some(_) =>
-            Seq(s"_hd_jm_$i" -> exprs.col(JmesPathEval(
-              exprs.expr(fieldOf(rule)), exprs.expr(lit(rule.jmespathRaw.get)))))
+            Seq(s"_hd_jm_$i" -> exprs.jmespathEval(fieldOf(rule), lit(rule.jmespathRaw.get)))
           case None =>
             rule.regex match {
               case Some(rx) if rx.namedGroups.nonEmpty =>
-                Seq(s"_hd_rx_$i" -> exprs.col(RegexCaptures(
-                  exprs.expr(fieldOf(rule)), exprs.expr(lit(rx.javaPattern)),
-                  rx.namedGroups.map(rx.groupIndexOf))))
+                Seq(s"_hd_rx_$i" -> exprs.regexCaptures(fieldOf(rule),
+                  lit(rx.javaPattern), rx.namedGroups.map(rx.groupIndexOf)))
               case Some(rx) =>
                 Seq(s"_hd_m_$i" -> coalesce(
                   fieldOf(rule).isNotNull && fieldOf(rule).rlike(rx.javaPattern),
@@ -133,8 +131,8 @@ object Router {
 
     // per-rule matched column (cheap, derived from the hoisted primitives)
     def matchedOf(rule: HRule, i: Int): Column = rule.jmespath match {
-      case Some(_) => coalesce(
-        fieldOf(rule).isNotNull && col(s"_hd_jm_$i").getField("matched"), lit(false))
+      // never null: a null field does not match
+      case Some(_) => col(s"_hd_jm_$i").getField("matched")
       case None => rule.regex match {
         case Some(rx) if rx.namedGroups.nonEmpty =>
           col(s"_hd_rx_$i").getField("matched")
@@ -178,7 +176,7 @@ object Router {
       config.Hb.render(t, vars, ColumnHbOps)
 
     // msg validity under a firing rule — the EXACT null condition of a
-    // hoisted merge (JsonHotdogMerge is null ⇔ msg isn't valid JSON; an
+    // hoisted merge (jsonHotdogMerge is null ⇔ msg isn't valid JSON; an
     // invalid rendered template fails the task like the reference's
     // unwrap). Routing kill flags and merge-error counters through this
     // parse-only check instead of `merged.isNull` means a consumer that
@@ -215,11 +213,11 @@ object Router {
               if (jsonT.mayRenderFail) matchedOf(rule, i) && !rhsFail
               else matchedOf(rule, i)
             s"_hd_mg_${i}_$j" -> when(guard,
-              exprs.col(JsonHotdogMerge(exprs.expr(msgCol), exprs.expr(rhs))))
+              exprs.jsonHotdogMerge(msgCol, rhs))
         }
     }
     val jsonOkCol: Map[String, Column] =
-      if (needJsonOk) Map("_hd_jsonok" -> exprs.col(JsonValid(exprs.expr(msgCol))))
+      if (needJsonOk) Map("_hd_jsonok" -> exprs.jsonValid(msgCol))
       else Map.empty
     val staged =
       if (mergeCols.isEmpty && jsonOkCol.isEmpty) withMatchers
@@ -412,9 +410,7 @@ object Router {
     val matchCols = cfg.rules.filter(_.field == "msg").map { rule =>
       val matched = rule.jmespath match {
         case Some(_) =>
-          exprs.col(JmesPathEval(
-            exprs.expr(lineCol), exprs.expr(lit(rule.jmespathRaw.get))))
-            .getField("matched")
+          exprs.jmespathEval(lineCol, lit(rule.jmespathRaw.get)).getField("matched")
         case None => rule.regex match {
           case Some(rx) => coalesce(lineCol.rlike(rx.javaPattern), lit(false))
           case None     => lit(false) // matcher-less rule: never matches

@@ -1,9 +1,6 @@
 package graft.hotdog
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,14 +25,16 @@ object SyslogParser {
     "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
 
   /** Returns a 5-field InternalRow(msg, severity, facility, hostname,
-    * appname) or null on parse failure. */
-  def parse(line: UTF8String): InternalRow = parseStr(line.toString)
+    * appname) or null on parse failure or null input. */
+  def parse(line: UTF8String): InternalRow =
+    if (line == null) null else parseStr(line.toString)
 
   /** Fused decode+parse: codepoints → String → parse, skipping the
     * intermediate UTF8String round-trip (2 fewer copies per row on the
     * hot path; the separate `line` column is only materialized when a
     * consumer actually reads it — column pruning drops it otherwise). */
   def parseTokens(tokens: org.apache.spark.sql.catalyst.util.ArrayData): InternalRow = {
+    if (tokens == null) return null
     val ints = tokens.toIntArray()
     parseStr(new String(ints, 0, ints.length))
   }
@@ -236,62 +235,4 @@ object SyslogParser {
       mkRow(s.substring(i), sev, fac, host, null)
     }
   }
-}
-
-/** `SyslogParse(line) -> struct<msg,severity,facility,hostname,appname>`,
-  * null on parse failure (drives the error.log_parse counter — P3). */
-case class SyslogParse(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = model.parsedSchema
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else SyslogParser.parse(v.asInstanceOf[UTF8String])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        $javaType ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.hotdog.SyslogParser.parse(${childGen.value});
-          ${ev.isNull} = (${ev.value} == null);
-        }""")
-  }
-  override protected def withNewChildInternal(newChild: Expression): SyslogParse =
-    copy(child = newChild)
-  override def prettyName: String = "syslog_parse"
-}
-
-/** `SyslogParseTokens(tokens array<int>) -> struct<...>` — fused P6+P1-P4:
-  * parse straight from the codepoint array (used on the hot path where the
-  * decoded `line` string is not otherwise consumed). */
-case class SyslogParseTokens(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = model.parsedSchema
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else SyslogParser.parseTokens(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        $javaType ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.hotdog.SyslogParser.parseTokens(${childGen.value});
-          ${ev.isNull} = (${ev.value} == null);
-        }""")
-  }
-  override protected def withNewChildInternal(newChild: Expression): SyslogParseTokens =
-    copy(child = newChild)
-  override def prettyName: String = "syslog_parse_tokens"
 }

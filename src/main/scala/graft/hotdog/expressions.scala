@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import graft.ops.KernelTable
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,6 +22,7 @@ object Codepoints {
   /** string -> Unicode codepoints. This is the seeded "tokenization" of the
     * corpus (SURVEY.md §1.3): one token per codepoint. */
   def encode(s: UTF8String): ArrayData = {
+    if (s == null) return null
     val str = s.toString
     val n = str.codePointCount(0, str.length)
     val out = new Array[Int](n)
@@ -71,8 +73,8 @@ object Codepoints {
   }
 }
 
-/** Static helper for [[RegexCaptures]]: one compiled-pattern cache shared
-  * across the executor JVM, one `find()` per row. */
+/** Static helper for [[exprs.regexCaptures]]: one compiled-pattern cache
+  * shared across the executor JVM, one `find()` per row. */
 object RegexHelp {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
@@ -80,13 +82,14 @@ object RegexHelp {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](false, null))
 
-  def captures(s: UTF8String, pattern: UTF8String, groupIdx: Array[Int])
+  def captures(s: UTF8String, pattern: UTF8String, groups: KernelTable[Array[Int]])
       : org.apache.spark.sql.catalyst.InternalRow = {
     if (s == null || pattern == null) return NoMatch
     val p = cache.computeIfAbsent(pattern.toString,
       (k: String) => java.util.regex.Pattern.compile(k))
     val m = p.matcher(s.toString)
     if (!m.find()) return NoMatch
+    val groupIdx = groups.get
     val gs = new Array[Any](groupIdx.length)
     var i = 0
     while (i < groupIdx.length) {
@@ -97,53 +100,6 @@ object RegexHelp {
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](true, new GenericArrayData(gs)))
   }
-}
-
-/** `RegexCaptures(str, pattern) -> struct<matched boolean, gs array<string>>`
-  * — rule matching + named-group extraction in ONE regex execution per row
-  * (rlike + k × regexp_extract would run the matcher k+1 times).
-  *
-  * `gs(i)` is the value of the i-th NAMED group (appearance order, indices
-  * resolved at plan build from [[config.CompiledRegex]]): null when the
-  * group did not participate in the match, "" when it captured an empty
-  * string. The distinction carries the reference's semantics
-  * (src/rules.rs:90-96: `captures.name(n)` is `Some("")` for an empty
-  * capture — which DOES override a colliding builtin variable — and `None`
-  * for a non-participating group, which does not). Null input → no match. */
-case class RegexCaptures(left: Expression, right: Expression,
-    groupIdx: Seq[Int])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("matched", BooleanType, nullable = false),
-    StructField("gs", ArrayType(StringType, containsNull = true), nullable = true)))
-  override def nullable: Boolean = false
-  override def foldable: Boolean = false
-
-  private lazy val idxArray: Array[Int] = groupIdx.toArray
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    RegexHelp.captures(
-      left.eval(input).asInstanceOf[UTF8String],
-      right.eval(input).asInstanceOf[UTF8String],
-      idxArray)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val l = left.genCode(ctx)
-    val r = right.genCode(ctx)
-    val idxRef = ctx.addReferenceObj("groupIdx", idxArray, "int[]")
-    ev.copy(code =
-      code"""
-        ${l.code}
-        ${r.code}
-        InternalRow ${ev.value} = graft.hotdog.RegexHelp.captures(
-          ${l.isNull} ? null : ${l.value},
-          ${r.isNull} ? null : ${r.value}, $idxRef);""",
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RegexCaptures =
-    copy(left = l, right = r)
-  override def prettyName: String = "regex_captures"
 }
 
 /** Identity wrapper marked non-deterministic: an optimizer barrier.
@@ -175,22 +131,111 @@ case class NoPushdown(child: Expression) extends UnaryExpression {
   override def prettyName: String = "no_pushdown"
 }
 
-/** Column-level wrappers. */
+/** Column-level wrappers. Each kernel column is one
+  * [[graft.ops.opscol.kernel]] call on a static method of this package. */
 object exprs {
   import org.apache.spark.sql.graftshim
+  import graft.ops.opscol.{kernel, table}
   private def codepoints(fn: String, dataType: DataType, c: Column): Column =
-    graft.ops.opscol.kernel(Codepoints.getClass, fn, dataType, c)
+    kernel(Codepoints.getClass, fn, dataType, Seq(c))
   /** tokens array<int> (Unicode codepoints) -> string: P6 decode
     * (SURVEY.md §2.2), inside whole-stage codegen */
   def codepointsToString(c: Column): Column = codepoints("decode", StringType, c)
   /** line string -> array<int>: the corpus tokenizer, exact inverse of
-    * [[codepointsToString]] */
+    * [[codepointsToString]]; null for null. `encode` maps null to null
+    * itself, as the parsers do: generated code then keeps the argument out
+    * of the null-propagation state (less code in the corpus-and-parse
+    * method, which is past the JIT's huge-method limit). */
   def stringToCodepoints(c: Column): Column =
-    codepoints("encode", ArrayType(IntegerType, containsNull = false), c)
+    kernel(Codepoints.getClass, "encode", ArrayType(IntegerType, containsNull = false),
+      Seq(c), propagateNull = false, returnNullable = true)
   /** the HTML escape handlebars applies to `{{var}}` (not `{{{var}}}`)
     * substitutions (A2 in SURVEY §2.4) */
   def handlebarsEscape(c: Column): Column = codepoints("htmlEscape", StringType, c)
+
+  /** line -> struct<msg,severity,facility,hostname,appname>, null on parse
+    * failure (drives the error.log_parse counter — P3) or null input. The
+    * parser maps null to null itself: that generates less per-row code
+    * than a null-propagating call. */
+  def syslogParse(line: Column): Column =
+    kernel(SyslogParser.getClass, "parse", model.parsedSchema, Seq(line),
+      propagateNull = false, returnNullable = true)
+  /** [[syslogParse]] straight from the codepoint array — fused P6+P1-P4,
+    * used on the hot path where the decoded `line` string is not otherwise
+    * consumed */
+  def syslogParseTokens(tokens: Column): Column =
+    kernel(SyslogParser.getClass, "parseTokens", model.parsedSchema, Seq(tokens),
+      propagateNull = false, returnNullable = true)
+
+  /** (str, pattern) -> struct<matched boolean, gs array<string>>: rule
+    * matching + named-group extraction in ONE regex execution per row
+    * (rlike + k × regexp_extract would run the matcher k+1 times).
+    *
+    * `gs(i)` is the value of group `groupIdx(i)` (the NAMED groups in
+    * appearance order, indices resolved at plan build from
+    * [[config.CompiledRegex]]): null when the group did not participate in
+    * the match, "" when it captured an empty string. The distinction
+    * carries the reference's semantics (src/rules.rs:90-96:
+    * `captures.name(n)` is `Some("")` for an empty capture — which DOES
+    * override a colliding builtin variable — and `None` for a
+    * non-participating group, which does not). Null input → no match. */
+  def regexCaptures(str: Column, pattern: Column, groupIdx: Seq[Int]): Column =
+    kernel(RegexHelp.getClass, "captures", StructType(Seq(
+      StructField("matched", BooleanType, nullable = false),
+      StructField("gs", ArrayType(StringType, containsNull = true), nullable = true))),
+      Seq(str, pattern, table(groupIdx.toArray)), propagateNull = false)
+
+  /** (json, path) -> struct<matched boolean, value string>: full JMESPath
+    * (reference src/rules.rs:70-85, see [[HotdogJson.jmesEval]]); null or
+    * invalid JSON input → matched = false (silent, F5) */
+  def jmespathEval(json: Column, path: Column): Column =
+    kernel(HotdogJson.getClass, "jmesEval", StructType(Seq(
+      StructField("matched", BooleanType, nullable = false),
+      StructField("value", StringType, nullable = true))),
+      Seq(json, path), propagateNull = false)
+
+  /** whether the string parses as one JSON document under serde_json rules
+    * (trailing tokens and non-finite doubles rejected); null → false. Parse
+    * only: the router's merge-error counters and cascade-kill conditions
+    * evaluate this, so a consumer that never reads the merged OUTPUT prunes
+    * the merge+serialize work and pays one parse instead */
+  def jsonValid(s: Column): Column =
+    kernel(HotdogJson.getClass, "jsonValid", BooleanType, Seq(s), propagateNull = false)
+
+  /** the top-level field profile of a JSON object document (the
+    * schema-drift monitor's kernel): one (key, vtype) entry per field;
+    * malformed / non-object / null input profiles as the single marker
+    * entry ("_malformed", "-"), so exploding the result yields a TOTAL
+    * per-row accounting in one parse */
+  def jsonFieldProfile(s: Column): Column =
+    kernel(HotdogJson.getClass, "fieldProfile", ArrayType(StructType(Seq(
+      StructField("key", StringType, nullable = false),
+      StructField("vtype", StringType, nullable = false))), containsNull = false),
+      Seq(s), propagateNull = false)
+
+  /** (msg, renderedMergeJson) -> the A3/A4 merge; null iff msg is not valid
+    * JSON (the cascade-kill signal). An invalid RENDERED template fails the
+    * task, as the reference's unwrap panics. */
+  def jsonHotdogMerge(msg: Column, rhs: Column): Column =
+    kernel(HotdogJson.getClass, "mergeEval", StringType, Seq(msg, rhs),
+      returnNullable = true)
+
+  /** (msg, pointer, rhs) -> the reference's JSON-pointer-targeted merge
+    * (src/merge.rs:91-135, dead in its runtime, exposed as a SQL function
+    * here); null iff msg/rhs aren't valid JSON or the pointer cannot be
+    * materialized */
+  def jsonHotdogMergeIn(msg: Column, pointer: Column, rhs: Column): Column =
+    kernel(HotdogJson.getClass, "mergeInEval", StringType, Seq(msg, pointer, rhs),
+      returnNullable = true)
+
   def noPushdown(c: Column): Column = graftshim.column(NoPushdown(expr(c)))
   def expr(c: Column): Expression = graftshim.expression(c)
   def col(e: Expression): Column = graftshim.column(e)
+}
+
+/** Expression form of [[exprs.syslogParseTokens]], for callers that build
+  * Catalyst expressions. */
+object SyslogParseTokens {
+  def apply(tokens: Expression): Expression =
+    exprs.expr(exprs.syslogParseTokens(exprs.col(tokens)))
 }

@@ -53,8 +53,8 @@ object Bloom {
     * Null-intolerant: null bits / null hash → null → a filter drops the
     * row, matching join null-key semantics. */
   private[graft] def mightContain(bits: Column, h: Column, numHashes: Int): Column =
-    opscol.kernel(BloomKernel.getClass, "mightContain", BooleanType, bits, h,
-      opscol.scalar(numHashes))
+    opscol.kernel(BloomKernel.getClass, "mightContain", BooleanType,
+      Seq(bits, h, opscol.scalar(numHashes)))
 
   /** Build the sharded bloom index over `keys` (one string key column,
     * nulls dropped — a null key can never equal anything, join

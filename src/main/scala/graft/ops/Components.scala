@@ -79,24 +79,13 @@ object Components {
         .observe(obs, count(when(col("rep") =!= col("old"), 1)).as("n_changed"))
         .select("id", "rep")
         .localCheckpoint()
-      // metric lands via an async listener — bounded poll, loud fallback
-      // (the bpeTrain pattern; count() never returns null, even on an
-      // empty round)
-      var polled = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-      val deadline = System.nanoTime() + 5000000000L
-      while (polled.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(10)
-        polled = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-      }
-      converged = polled.get("n_changed") match {
-        case Some(v: Long) => v == 0L
-        case _ =>
-          System.err.println(
-            s"[connectedComponents] round $iter: observed n_changed missing; re-scanning")
-          // halved no longer carries `old` — recompute the changed set
-          // against the previous labels (fallback path only)
-          halved.join(labels.withColumnRenamed("rep", "_prev"), Seq("id"))
-            .filter(col("rep") =!= col("_prev")).isEmpty
+      // count() never returns null, even on an empty round; the fallback
+      // recomputes the changed set against the previous labels, since
+      // halved no longer carries `old`
+      converged = org.apache.spark.sql.graftshim.observedOr(obs, "n_changed",
+          s"connectedComponents round $iter: re-scanning")((n: Long) => n == 0L) {
+        halved.join(labels.withColumnRenamed("rep", "_prev"), Seq("id"))
+          .filter(col("rep") =!= col("_prev")).isEmpty
       }
       // the new round is materialized with truncated lineage — the
       // previous round's checkpoint blocks can go

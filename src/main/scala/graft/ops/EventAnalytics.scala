@@ -313,14 +313,13 @@ object EventAnalytics {
     * error.log_parse idiom applied to payloads).
     *
     * Scale shape: ONE parse per row inside whole-stage codegen
-    * ([[graft.hotdog.JsonFieldProfile]] emits (key, vtype) entries in a
+    * ([[graft.hotdog.exprs.jsonFieldProfile]] emits (key, vtype) entries in a
     * single pass — the builtin alternative re-parses per field), a
     * zero-shuffle explode, and one map-side-combinable hash aggregate
     * onto the bounded (groups × keys × types) vocabulary. The corpus
     * never shuffles. */
   def jsonProfile(df: DataFrame, groupCol: String, jsonCol: Column): DataFrame = {
-    val entries = graft.hotdog.exprs.col(
-      graft.hotdog.JsonFieldProfile(graft.hotdog.exprs.expr(jsonCol)))
+    val entries = graft.hotdog.exprs.jsonFieldProfile(jsonCol)
     df.select(col(groupCol), explode(entries).as("_f"))
       .groupBy(col(groupCol), col("_f.key").as("key"),
         col("_f.vtype").as("vtype"))

@@ -307,20 +307,9 @@ object TokenOps {
             val next = rewritten
               .observe(obs, sum(size(col("ts"))).as("n_tok"))
               .localCheckpoint()
-            // the metric lands via an async listener — bounded poll (the
-            // Pipeline.writeBatch pattern), then the loud fallback
-            var polled = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-            val deadline = System.nanoTime() + 5000000000L
-            while (polled.isEmpty && System.nanoTime() < deadline) {
-              Thread.sleep(20)
-              polled = org.apache.spark.sql.graftshim.observationGetOrEmpty(obs)
-            }
-            val v = polled.get("n_tok") match {
-              case Some(x: Long) => x
-              case _ =>
-                System.err.println(
-                  s"[bpeTrain] round $r: observed n_tok missing; re-scanning")
-                next.agg(sum(size(col("ts")))).head().getLong(0)
+            val v = org.apache.spark.sql.graftshim.observedOr(obs, "n_tok",
+                s"bpeTrain round $r: re-scanning")((x: Long) => x) {
+              next.agg(sum(size(col("ts")))).head().getLong(0)
             }
             cur.unpersist()
             cur = next

@@ -942,23 +942,28 @@ object opscol {
   /** `cls.fn(args...)` as a `StaticInvoke`. Generated code calls the static
     * method directly inside whole-stage codegen (a Scala object's mirror
     * class has static forwarders); interpreted eval finds the same method
-    * by reflection from the argument data types. Null-intolerant: a null
-    * argument gives null without calling `fn`, and the result is nullable
-    * iff an argument is. */
-  def kernel(cls: Class[_], fn: String, dataType: DataType, args: Column*): Column =
+    * by reflection from the argument data types.
+    *
+    * `propagateNull`: a null argument gives null without calling `fn`
+    * (else `fn` receives the null and handles it). `returnNullable`: `fn`
+    * may return null for non-null arguments; with `false`, generated code
+    * takes a returned null for a value. The result is nullable iff either
+    * applies (a null-propagating call with a nullable argument). */
+  def kernel(cls: Class[_], fn: String, dataType: DataType, args: Seq[Column],
+      propagateNull: Boolean = true, returnNullable: Boolean = false): Column =
     graftshim.column(StaticInvoke(cls, dataType, fn, args.map(graftshim.expression),
-      propagateNull = true, returnNullable = false))
+      propagateNull = propagateNull, returnNullable = returnNullable))
 
   /** a scalar argument as a Catalyst literal (`functions.lit` would leave
     * an unresolved node, which a SQL function builder never resolves) */
   private[graft] def scalar(v: Any): Column = graftshim.column(Literal(v))
 
   /** a constant table argument (see [[KernelTable]]) */
-  private def table(values: AnyRef): Column =
+  private[graft] def table(values: AnyRef): Column =
     graftshim.column(Literal(new KernelTable(values), ObjectType(classOf[KernelTable[_]])))
 
   private def ops(fn: String, dataType: DataType, args: Column*): Column =
-    kernel(OpsKernels.getClass, fn, dataType, args: _*)
+    kernel(OpsKernels.getClass, fn, dataType, args)
   private val Longs = ArrayType(LongType, containsNull = false)
   private val Ints = ArrayType(IntegerType, containsNull = false)
   private val Strings = ArrayType(StringType, containsNull = false)

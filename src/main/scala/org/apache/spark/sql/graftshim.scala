@@ -25,11 +25,31 @@ object graftshim {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
-  /** Non-blocking read of an Observation's metrics (getOrEmpty is
-    * private[sql]): empty until the observed dataset's action completes
-    * AND the async listener has delivered. */
-  def observationGetOrEmpty(obs: Observation): Map[String, Any] =
-    obs.getOrEmpty
+  /** How long [[observedOr]] waits for an observed metric. */
+  private val ObservedWaitSeconds = 10
+
+  /** `use` of metric `metric` of `obs`, whose observed dataset's action
+    * has just returned. Spark delivers observed metrics from an async
+    * listener just after the action, so this waits for them, up to
+    * [[ObservedWaitSeconds]]. A metric that does not arrive (or is null) is
+    * never skipped silently: one loud line ending in `fallbackNote`, then
+    * the caller's exact recompute `fallback`. */
+  def observedOr[A, T](obs: Observation, metric: String, fallbackNote: String)(
+      use: A => T)(fallback: => T): T = {
+    val delivered =
+      try {
+        scala.concurrent.Await.ready(obs.future,
+          scala.concurrent.duration.Duration(ObservedWaitSeconds, "s"))
+        obs.get.get(metric).filter(_ != null)
+      } catch { case _: java.util.concurrent.TimeoutException => None }
+    delivered match {
+      case Some(v) => use(v.asInstanceOf[A])
+      case None =>
+        System.err.println(s"[graft] WARN observed metric $metric of ${obs.name} " +
+          s"not delivered within ${ObservedWaitSeconds}s; $fallbackNote")
+        fallback
+    }
+  }
 
   /** Release the block-manager storage behind a localCheckpoint'ed frame
     * (LogicalRDD and its persisted RDD are private[sql]; Dataset offers no

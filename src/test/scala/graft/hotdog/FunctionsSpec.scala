@@ -45,6 +45,12 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.getBoolean(13) && !r.getBoolean(14))
   }
 
+  test("an unaliased SQL call of a registered function is named by its SQL name") {
+    Functions.registerAll(spark)
+    val cols = spark.sql("SELECT json_valid('{}'), simhash64('a b')").columns
+    assert(cols.toSeq == Seq("json_valid({})", "simhash64(a b)"), cols.mkString(", "))
+  }
+
   test("json_valid: serde_json acceptance; merge of invalid RENDERED template fails the task") {
     Functions.registerAll(spark)
     val r = spark.sql(

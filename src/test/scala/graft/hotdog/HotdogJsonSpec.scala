@@ -164,8 +164,7 @@ class HotdogJsonSpec extends AnyFunSuite {
       """{"meta":{}}""",
       """not json""",
       """{"meta":null}""").toDF("j")
-    val jm = exprs.col(JmesPathEval(
-      exprs.expr(col("j")), exprs.expr(lit("meta.topic"))))
+    val jm = exprs.jmespathEval(col("j"), lit("meta.topic"))
     val out = df.select(jm.getField("matched").as("m"), jm.getField("value").as("v")).collect()
     assert(out(0).getBoolean(0) && out(0).getString(1) == "test")
     assert(out(1).getBoolean(0) && out(1).isNullAt(1)) // non-string result: matched, no value

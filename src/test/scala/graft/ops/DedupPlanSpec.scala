@@ -173,4 +173,11 @@ class DedupPlanSpec extends AnyFunSuite {
     val after = spark.conf.getAll.toSet
     assert(after == before, s"set: ${after -- before}, lost: ${before -- after}")
   }
+
+  test("stream queries leave no checkpoint directory behind") {
+    def ckpts = new java.io.File("/dev/shm").list().filter(_.startsWith("graft-ckpt-")).toSet
+    val before = ckpts
+    graft.SparkEntry.queries("hd_window")(spark, sf).collect()
+    assert((ckpts -- before).isEmpty, s"left behind: ${ckpts -- before}")
+  }
 }

@@ -893,16 +893,26 @@ class OpsSpec extends AnyFunSuite {
       val vec = tokens.take(8).map(t => (t % 7 - 3).toFloat)
       val frags = tokens.grouped(3).zipWithIndex
         .map { case (g, i) => Row(3L * i, g) }.toSeq.reverse
+      val k = r.getLong(0).toInt
+      // hotdog inputs: every other line unparsable; JSON that is an object,
+      // not JSON at all, or an array a pointer cannot be materialized in
+      val line = if (k % 2 == 0) s"<13>1 2020-04-18T15:16:09Z host app - - - $text" else text
+      val json = Seq(s"""{"meta":{"topic":"t$k"},"a":[1]}""", text, "[]",
+        """{"meta":{"topic":7}}""")(k % 4)
+      val ptr = if (json == "[]") "/5" else "/meta/x"
       Row(text, text.split(" ").toSeq, tokens, vec, vec.map(_.toDouble),
-        r.getLong(0) * 7.5, frags, Seq(-1L, r.getLong(0)), r.getLong(0))
-    }.toSeq :+ Row(Seq.fill(9)(null): _*)
+        r.getLong(0) * 7.5, frags, Seq(-1L, r.getLong(0)), r.getLong(0),
+        line, json, ptr, s"""{"k":$k}""")
+    }.toSeq :+ Row(Seq.fill(13)(null): _*)
     val schema = StructType(Seq(
       StructField("text", StringType), StructField("words", ArrayType(StringType)),
       StructField("tokens", ArrayType(IntegerType)), StructField("vec", ArrayType(FloatType)),
       StructField("vecd", ArrayType(DoubleType)), StructField("v", DoubleType),
       StructField("frags", ArrayType(StructType(Seq(StructField("chunk_off", LongType),
         StructField("frag", ArrayType(IntegerType)))))),
-      StructField("bits", ArrayType(LongType)), StructField("h", LongType)))
+      StructField("bits", ArrayType(LongType)), StructField("h", LongType),
+      StructField("line", StringType), StructField("json", StringType),
+      StructField("ptr", StringType), StructField("rhs", StringType)))
     // an RDD source: a local relation would be constant-folded
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     val gramTable = OpsKernels.keyPairTable(OpsKernels.tokenGramKeys(
@@ -940,6 +950,20 @@ class OpsSpec extends AnyFunSuite {
       "wordNgramsMulti" -> opscol.wordNgramsMulti(col("text"), 2),
       "charEntropy" -> opscol.charEntropy(col("text")),
       "tokenEntropy" -> opscol.tokenEntropy(t))
+    // the hotdog kernels: four map null input to a value, and the parsers
+    // and merges return null for some non-null inputs
+    val hotdog = Seq(
+      "syslogParse" -> graft.hotdog.exprs.syslogParse(col("line")),
+      "syslogParseTokens" -> graft.hotdog.exprs.syslogParseTokens(
+        graft.hotdog.exprs.stringToCodepoints(col("line"))),
+      "regexCaptures" -> graft.hotdog.exprs.regexCaptures(col("text"),
+        lit("(?<w>qu\\w+)|(?<z>zzz)|(?<e>)"), Seq(1, 2, 3)),
+      "jmespathEval" -> graft.hotdog.exprs.jmespathEval(col("json"), lit("meta.topic")),
+      "jsonValid" -> graft.hotdog.exprs.jsonValid(col("json")),
+      "jsonFieldProfile" -> graft.hotdog.exprs.jsonFieldProfile(col("json")),
+      "jsonHotdogMerge" -> graft.hotdog.exprs.jsonHotdogMerge(col("json"), col("rhs")),
+      "jsonHotdogMergeIn" -> graft.hotdog.exprs.jsonHotdogMergeIn(col("json"),
+        col("ptr"), col("rhs")))
     def norm(v: Any): Any = v match {
       case b: Array[Byte] => b.toSeq
       case s: scala.collection.Seq[_] => s.map(norm)
@@ -948,7 +972,8 @@ class OpsSpec extends AnyFunSuite {
     def run(mode: String): Seq[Map[String, Any]] =
       graft.hotdog.Pipeline.withConf(spark, "spark.sql.codegen.factoryMode" -> mode,
           "spark.sql.codegen.wholeStage" -> (mode == "CODEGEN_ONLY").toString) {
-        val out = df.select(col("text") +: kernels.map { case (n, c) => c.as(n) }: _*)
+        val out = df.select(col("text") +: col("json") +:
+          (kernels ++ hotdog).map { case (n, c) => c.as(n) }: _*)
         val plan = out.queryExecution.executedPlan.toString
         assert(plan.contains("*(") == (mode == "CODEGEN_ONLY"), plan)
         out.collect().toSeq.map(r => r.getValuesMap[Any](r.schema.fieldNames.toSeq)
@@ -957,11 +982,20 @@ class OpsSpec extends AnyFunSuite {
     val interpreted = run("NO_CODEGEN")
     val generated = run("CODEGEN_ONLY")
     assert(interpreted.length == docs.count() + 1)
-    for ((i, g) <- interpreted.zip(generated); (name, _) <- kernels)
+    for ((i, g) <- interpreted.zip(generated); (name, _) <- kernels ++ hotdog)
       assert(i(name) == g(name),
         s"$name on ${i("text")}: interpreted ${i(name)} != generated ${g(name)}")
     for (r <- interpreted; (name, _) <- kernels)
       assert((r(name) == null) == (r("text") == null), s"$name on ${r("text")}: ${r(name)}")
+    def nulls(name: String): Seq[Any] =
+      interpreted.filter(_(name) == null).map(_("json"))
+    for (name <- Seq("regexCaptures", "jmespathEval", "jsonValid", "jsonFieldProfile"))
+      assert(nulls(name).isEmpty, name)
+    // null on the null row and on non-null rows: 3 unparsable lines, 2
+    // msgs that are not JSON, and (merge_in) 2 pointers an array cannot hold
+    assert(nulls("syslogParse").size == 4 && nulls("syslogParseTokens").size == 4)
+    assert(nulls("jsonHotdogMerge").size == 3 && nulls("jsonHotdogMergeIn").size == 5)
+    assert(nulls("jsonHotdogMergeIn").count(_ == "[]") == 2)
   }
 
   test("assembleFragments: 8192 one-token fragments in reverse offset order") {

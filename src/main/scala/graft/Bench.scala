@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  type Query = (SparkSession, String) => DataFrame
+
+  /** The session Bench (and Trace) times queries in. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -10,17 +12,17 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // two timed executions per query, min reported: the first run of a
-    // fresh generated class executes tiered (C1) while C2 compiles, which
-    // can dominate small-SF timings 3-10x on this box (see BENCH/BASELINE.md)
-    // SPARK_GRAFT_BENCH_ONLY=dd_minhash,dd_wordset_jaccard → subset run;
-    // unknown names are a hard error (a typo must not print ok:true)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    spark
+  }
+
+  /** The queries named in `only` (all when None), in run order. Unknown
+    * names are a hard error naming them (a typo must not print ok:true);
+    * `what` says where the names came from. */
+  def ordered(only: Option[Set[String]], what: String): Seq[(String, Query)] = {
     only.foreach { names =>
       val unknown = names.diff(SparkEntry.queries.keySet)
       require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
+        s"$what names not in SparkEntry.queries: ${unknown.mkString(", ")}")
     }
     val selected = only match {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
@@ -42,11 +44,22 @@ object Bench {
       "sim_kmeans").zipWithIndex.toMap
     val streamingLast = Set("hd_window", "hd_state_totals", "dd_stream_dedup",
       "ev_sessions_stream")
-    val ordered = selected.toSeq.sortBy { case (n, _) =>
+    selected.toSeq.sortBy { case (n, _) =>
       (if (streamingLast(n)) 2 else if (priority.contains(n)) 0 else 1,
         priority.getOrElse(n, 0), n)
     }
-    val results = ordered.map { case (name, fn) =>
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
+    // two timed executions per query, min reported: the first run of a
+    // fresh generated class executes tiered (C1) while C2 compiles, which
+    // can dominate small-SF timings 3-10x on this box (see BENCH/BASELINE.md)
+    // SPARK_GRAFT_BENCH_ONLY=dd_minhash,dd_wordset_jaccard → subset run
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val results = ordered(only, "SPARK_GRAFT_BENCH_ONLY").map { case (name, fn) =>
       val runs = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }

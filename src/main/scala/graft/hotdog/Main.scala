@@ -1,11 +1,11 @@
 package graft.hotdog
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** E1 daemon-path equivalent as a spark-submit main: synthesize (or read)
-  * the sequences table, route it with a hotdog-YAML config, fan out to
-  * per-topic parquet sinks, write the audit table, print the /stats JSON.
+/** E1 daemon-path equivalent as a spark-submit main: read the sequences
+  * table (or synthesize it to `out/input`), route it with a hotdog-YAML
+  * config, fan out to per-topic parquet sinks, write the audit table, print
+  * the /stats JSON.
   *
   * Usage: Main [--config path.yml] [--rows N] [--input dir] [--out dir]
   *             [--batch id]
@@ -34,10 +34,7 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val sequences = opts.get("input") match {
-      case Some(dir) => spark.read.parquet(dir)
-      case None      => Corpus.sequences(spark, rows)
-    }
+    val sequences = input(spark, opts.get("input"), rows, out)
     val dim = Corpus.sourceDim(spark)
     val result = Pipeline.run(sequences, cfg, dim = Some(dim))
 
@@ -48,4 +45,14 @@ object Main {
     println(s"[graft-hotdog] batch $batchId written to $out/routed")
     spark.stop()
   }
+
+  /** The sequences table as a parquet scan: `given` when set, else `rows`
+    * generated rows written once under `out/input`. Generated in the plan,
+    * the corpus fuses into the route's codegen stage, one method over
+    * HotSpot's 8,000 B `HugeMethodLimit` that is then never JIT-compiled. */
+  def input(spark: SparkSession, given: Option[String], rows: Long, out: String): DataFrame =
+    spark.read.parquet(given.getOrElse {
+      Corpus.sequences(spark, rows).write.mode("overwrite").parquet(s"$out/input")
+      s"$out/input"
+    })
 }

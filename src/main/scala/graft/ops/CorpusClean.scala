@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * The one multi-consumer frame — the cleaned-survivor reps corpus — is
   * localCheckpoint'd (the dsirSelect idiom): as a pure plan Catalyst
   * re-derived the corpus scan + fingerprint + aggregate + semi-join once
-  * per consumer (measured 7.4s → 2.0s at sf0.1, ProfileClean). reps also
+  * per consumer (measured 7.4s → 2.0s at sf0.1, CHANGES_r5.md). reps also
   * serves as the keeper-id set for the verdict's _is_rep probe (its ids
   * ARE the keeper ids by construction), so the keeper frame itself has a
   * single consumer and no checkpoint. At production scale the reps
@@ -76,7 +76,7 @@ object CorpusClean {
     // banding chain whose bucket/pair stages are multi-consumer, and it
     // IS the cleaned-survivor corpus the scaladoc tells production
     // pipelines to persist — and since r6 it also serves the verdict's
-    // _is_rep probe. Measured (ProfileClean, sf0.1, warm): the pure-plan
+    // _is_rep probe. Measured (sf0.1, warm; CHANGES_r5.md): the pure-plan
     // composition re-derived filter+fingerprint+agg+semi-join per
     // consumer at 7.4s end-to-end; checkpointing reps runs the identical
     // verdict in ~2s.

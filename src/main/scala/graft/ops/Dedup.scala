@@ -323,7 +323,7 @@ object Dedup {
     //    on shuffle bytes AND kills the per-PAIR shingle recompute: at
     //    word-set thresholds candidates outnumber DOCS by 100×+ (sf0.1:
     //    616k candidate pairs over 5k docs ⇒ 1.2M wordShingles calls,
-    //    the dominant cost of the whole query — ProfileDd, r6), while
+    //    the dominant cost of the whole query — OPTIMIZATION_r06.md §2), while
     //    precomputing runs the kernel once per doc on the joins' build
     //    side.
     val txt =

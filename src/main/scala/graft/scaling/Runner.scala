@@ -1,7 +1,6 @@
 package graft.scaling
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -138,22 +137,14 @@ object Runner {
     c.conf.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // per-stage wall/cpu/gc/spill/shuffle, so a slow trial can be pinned
-    // to a stage from the log alone
-    s.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        val m = i.taskMetrics
-        val wall = (i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)) / 1000.0
-        println(f"STAGE ${i.stageId}%4d tasks=${i.numTasks}%4d wall=$wall%7.1fs " +
-          f"run=${m.executorRunTime / 1000.0}%8.1fs gc=${m.jvmGCTime / 1000.0}%7.1fs " +
-          f"spillMem=${m.memoryBytesSpilled >> 20}%6dMB spillDisk=${m.diskBytesSpilled >> 20}%6dMB " +
-          f"shufW=${m.shuffleWriteMetrics.bytesWritten >> 20}%6dMB shufR=${m.shuffleReadMetrics.totalBytesRead >> 20}%6dMB " +
-          i.name.takeWhile(_ != '\n').take(60))
-      }
-    })
+    graft.Trace.install(s)
     s
   }
+
+  // per-stage wall/cpu/gc/spill/shuffle of the work since the last call, so
+  // a slow trial can be pinned to a stage from the log alone
+  private def printStages(s: SparkSession): Unit =
+    graft.Trace.install(s).take(s).stages.foreach(st => println(st.line))
 
   private def corpusOf(c: Campaign, size: Long): Input = {
     val dir = corpusDir(c, size)
@@ -170,6 +161,7 @@ object Runner {
       c.corpus(s, n).foreach { case (t, df) =>
         df.write.mode("overwrite").parquet(s"$dir/$t") }
       Files.createFile(Paths.get(dir, "_SUCCESS"))
+      printStages(s)
     }
     s.stop()
   }
@@ -187,6 +179,7 @@ object Runner {
         val t0 = System.nanoTime()
         val read = c.run(s, job, in, out)
         val t = (System.nanoTime() - t0) / 1e9
+        printStages(s)
         println(f"RUN ${c.name}/$job size=${in.size} cores=$cores wall=$t%.2fs")
         if (record) {
           val got = read()
@@ -309,6 +302,7 @@ object Runner {
     val in = corpusOf(c, a.size)
     val s = session(c, Runtime.getRuntime.availableProcessors)
     val v = c.verify(s, in, a.counters)
+    printStages(s)
     s.stop()
     val sections = c.jobs.map(jobSection(c, _, a, b))
     val md = Seq(c.header(a.size, a.counters), ProtocolNote,
@@ -339,6 +333,7 @@ object Runner {
     val counters = c.jobs.map(j => { delete(out); c.run(s, j, in, out)() }).reduce(_ ++ _)
     val wall = (System.nanoTime() - t0) / 1e9
     val v = c.verify(s, in, counters)
+    printStages(s)
     delete(out)
     s.stop()
     val md =

@@ -51,6 +51,19 @@ object graftshim {
     }
   }
 
+  /** The listeners registered on the session's context and on the session
+    * itself (`listenerBus` is private[spark], `listListeners` private[sql]). */
+  def sparkListeners(spark: SparkSession): Seq[org.apache.spark.scheduler.SparkListenerInterface] = {
+    import scala.jdk.CollectionConverters._
+    spark.sparkContext.listenerBus.listeners.asScala.toSeq
+  }
+  def executionListeners(spark: SparkSession): Seq[util.QueryExecutionListener] =
+    spark.listenerManager.listListeners().toSeq
+
+  /** Block until every event posted so far has reached the listeners. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Release the block-manager storage behind a localCheckpoint'ed frame
     * (LogicalRDD and its persisted RDD are private[sql]; Dataset offers no
     * unpersist for checkpoints). Iterative operators that checkpoint per

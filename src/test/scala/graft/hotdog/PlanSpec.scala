@@ -146,4 +146,24 @@ class PlanSpec extends AnyFunSuite {
         .filter(col("topic").isNotNull).count()).sum
     assert(n == expect)
   }
+
+  test("Main without --input: every generated method of the sink stage is JIT-compilable") {
+    // HotSpot never compiles a method over HugeMethodLimit (8,000 B of
+    // bytecode): with the corpus generated in the plan, generation, parse,
+    // route and enrich fused into one 13.6 KB method that ran interpreted
+    val out = Files.createTempDirectory("graft-main").toString
+    val sizes = Pipeline.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val seqs = Main.input(spark, None, 2000, out)
+      val sink = Pipeline.emittedOnly(
+        Pipeline.run(seqs, Configs.flagship, Some(Corpus.sourceDim(spark))).routed)
+        .repartition(col("topic"))
+      sink.queryExecution.executedPlan.collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec =>
+          org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+            .compile(w.doCodeGen()._2)._2.maxMethodCodeSize
+      }
+    }
+    info(s"largest generated method per codegen stage: ${sizes.mkString(", ")} B")
+    assert(sizes.nonEmpty && sizes.max < 8000, s"largest generated methods: $sizes")
+  }
 }

@@ -43,7 +43,7 @@ object Bench {
       "tok_contam", "tok_ngrams", "pipe_dsir", "pipe_shuffle",
       "sim_kmeans").zipWithIndex.toMap
     val streamingLast = Set("hd_window", "hd_state_totals", "dd_stream_dedup",
-      "ev_sessions_stream")
+      "ev_sessions_stream", "ev_stream_join")
     selected.toSeq.sortBy { case (n, _) =>
       (if (streamingLast(n)) 2 else if (priority.contains(n)) 0 else 1,
         priority.getOrElse(n, 0), n)

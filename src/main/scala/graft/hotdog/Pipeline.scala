@@ -22,12 +22,29 @@ import graft.hotdog.config.HotdogConfig
   */
 object Pipeline {
 
-  /** `stats` is LAZY: statsOf runs a (small) job at evaluation time, and a
-    * caller consuming only `routed` must not pay for — or trigger — a
-    * second pass over the data at construction. */
+  /** `stats` is LAZY and never waits. Once the [[writeBatch]] that wrote
+    * `routed` has observed its lineage slots, it is those slots reshaped
+    * (no Spark job); before that write, or when the write took its
+    * recompute fallback, it is [[Stats.statsOf]] of the rows below the
+    * enrich join, a second pass that re-runs the cascade. Both count the
+    * same rows, so `/stats` is the same either way. */
   final class Result(val routed: DataFrame, statsThunk: => DataFrame) {
     lazy val stats: DataFrame = statsThunk
   }
+
+  /** What [[run]] hands to the [[writeBatch]] that writes its `routed`:
+    * the rows below the enrich join and the dim, so the write can observe
+    * the rows [[Stats.statsOf]] counts (the join repeats a row once per dim
+    * row of its source), and back from that write the per-topic counters
+    * its observed slots held. */
+  private final class Handoff(val routed0: DataFrame, val dim: Option[DataFrame]) {
+    @volatile var observed: Option[Seq[Stats.TopicCounts]] = None
+  }
+
+  /** `Result.routed` → its hand-off. A Dataset compares by identity, and a
+    * weak key lets a dropped result take its entry with it. */
+  private val handoffs = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Handoff]())
 
   /** Routed rows that actually emitted, filtered WITHOUT letting the
     * optimizer push the predicate beneath the router projection (see
@@ -40,12 +57,16 @@ object Pipeline {
       dim: Option[DataFrame] = None,
       clock: Column = Router.DefaultClock): Result = {
     val routed0 = Router.route(sequences, cfg, clock)
-    val routed = dim match {
-      case Some(d) => routed0.join(broadcast(d), Seq("source"), "left")
-      case None    => routed0
-    }
-    new Result(routed, Stats.statsOf(routed0))
+    val routed = enrich(routed0, dim)
+    val handoff = new Handoff(routed0, dim)
+    handoffs.put(routed, handoff)
+    new Result(routed, handoff.observed
+      .fold(Stats.statsOf(routed0))(Stats.fromCounts(routed0.sparkSession, _)))
   }
+
+  /** the broadcast left join of routed rows with the source dim, if any */
+  private def enrich(routed0: DataFrame, dim: Option[DataFrame]): DataFrame =
+    dim.fold(routed0)(d => routed0.join(broadcast(d), Seq("source"), "left"))
 
   /** Fan-out sink (S5): routed rows partitioned by topic, parquet.
     * `saltBuckets` bounds the number of write tasks per topic so a hot
@@ -144,29 +165,42 @@ object Pipeline {
     * slots and the merge (map union) is idempotent — the north_rule's
     * "every stage emits per-partition lineage and metric rows", with the
     * metric channel being Spark's observed-metrics accumulator.
+    *
+    * The same slots are the batch's `/stats`: when `routed` is the `routed`
+    * of a [[run]] result, the write observes the rows below its enrich join
+    * (the rows [[Stats.statsOf]] counts, and the input rows the audit
+    * traces) and hands their per-topic counters to that result's `stats`,
+    * so a `Main` batch evaluates the cascade exactly once.
     * @return sink write micros (the kafka.producer.sent timer slot). */
   def writeBatch(routed: DataFrame, outDir: String, auditDir: String,
       batchId: Long, saltBuckets: Int = 0): Long = {
     val spark = routed.sparkSession
+    val handoff = Option(handoffs.get(routed))
+    val below = handoff.fold(routed)(_.routed0)
     val obs = org.apache.spark.sql.Observation(
       s"graft_audit_${batchId}_${System.nanoTime()}")
     val lineage = udaf(LineageAgg)
-    val observed = routed
-      .withColumn("_pid", spark_partition_id())
+    val observed = below
       .withColumn("input_file", input_file_name())
-      .observe(obs, lineage(col("_pid"), col("topic"), col("input_file"),
+      .observe(obs, lineage(col("topic"), col("input_file"),
         coalesce(col("parse_ok"), lit(false)),
         col("err_merge_invalid_json").cast("long"),
-        col("err_merge_target_not_json").cast("long")).as("lineage"))
-    val micros = writeFanOut(observed, outDir, batchId, saltBuckets)
+        col("err_merge_target_not_json").cast("long"),
+        col("err_topic_parse_failed").cast("long")).as("lineage"))
+    // the same rows as `routed`: the broadcast join is narrow, so a row's
+    // task and input file are the same below it as above it
+    val micros = writeFanOut(enrich(observed, handoff.flatMap(_.dim)), outDir,
+      batchId, saltBuckets)
     // the exact-recompute fallback re-runs the FULL cascade — the double
     // evaluation the observed audit exists to eliminate, so it is loud
     // (ADVICE r4): in a streaming bench it would double every batch's cost
     org.apache.spark.sql.graftshim.observedOr(obs, "lineage",
         s"batch $batchId: falling back to a full audit recompute (cascade runs twice)") {
       (slots: scala.collection.Map[String, scala.collection.Seq[Long]]) =>
-        writeAuditRows(spark, slots, auditDir, batchId)
-    }(writeAudit(routed, auditDir, batchId))
+        val folded = LineageAgg.fold(slots)
+        writeAuditRows(spark, folded, auditDir, batchId)
+        handoff.foreach(_.observed = Some(LineageAgg.perTopic(folded)))
+    }(writeAudit(below, auditDir, batchId))
     micros
   }
 
@@ -184,27 +218,18 @@ object Pipeline {
     org.apache.spark.sql.types.StructField("merge_invalid_json",
       org.apache.spark.sql.types.LongType, nullable = false),
     org.apache.spark.sql.types.StructField("merge_target_not_json",
+      org.apache.spark.sql.types.LongType, nullable = false),
+    org.apache.spark.sql.types.StructField("topic_parse_failed",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** Audit rows from the observed per-partition lineage slots: fold the
-    * partition id out (summing — each (pid, topic, file) slot is
-    * exactly-once) and write the same schema [[writeAudit]] produces. */
-  private[hotdog] def writeAuditRows(spark: SparkSession,
-      slots: scala.collection.Map[String, scala.collection.Seq[Long]],
+  /** Audit rows from the folded lineage slots ([[LineageAgg.fold]]), in
+    * the schema [[writeAudit]] produces. */
+  private def writeAuditRows(spark: SparkSession,
+      folded: collection.Map[(String, String), Array[Long]],
       auditDir: String, batchId: Long): Unit = {
-    val folded = scala.collection.mutable.HashMap.empty[(String, String), Array[Long]]
-    slots.foreach { case (k, v) =>
-      val parts = k.split(LineageAgg.Sep, -1) // pid, topicEnc, file
-      val acc = folded.getOrElseUpdate((parts(1), parts(2)), new Array[Long](4))
-      var i = 0
-      while (i < 4) { acc(i) += v(i); i += 1 }
-    }
     val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(folded.toSeq.sortBy(_._1).map {
-        case ((tEnc, f), c) =>
-          org.apache.spark.sql.Row(
-            if (tEnc == LineageAgg.NullTopic) null else tEnc,
-            f, c(0), c(1), c(2), c(3))
+      java.util.Arrays.asList(folded.toSeq.sortBy { case ((t, f), _) => (Option(t), f) }.map {
+        case ((topic, f), c) => org.apache.spark.sql.Row(topic, f, c(0), c(1), c(2), c(3), c(4))
       }: _*)
     val audit = spark.createDataFrame(rows, AuditSchema)
       .withColumn("batch_id", lit(batchId))
@@ -225,17 +250,19 @@ object Pipeline {
         count(lit(1)).as("rows"),
         sum(when(col("parse_ok"), 1L).otherwise(0L)).as("parsed_rows"),
         sum(col("err_merge_invalid_json")).as("merge_invalid_json"),
-        sum(col("err_merge_target_not_json")).as("merge_target_not_json"))
+        sum(col("err_merge_target_not_json")).as("merge_target_not_json"),
+        sum(col("err_topic_parse_failed")).as("topic_parse_failed"))
       .withColumn("batch_id", lit(batchId))
       .withColumn("completed_at", current_timestamp())
     writeAuditDf(routed.sparkSession, audit, auditDir)
   }
 
-  /** idempotent dynamic-partition write shared by both audit producers */
+  /** idempotent dynamic-partition write shared by both audit producers:
+    * one file per batch_id, from one task (`coalesce`, so no shuffle) */
   private def writeAuditDf(spark: SparkSession, audit: DataFrame,
       auditDir: String): Unit =
     withConf(spark, DynamicOverwrite) {
-      audit.repartition(1).write.partitionBy("batch_id")
+      audit.coalesce(1).write.partitionBy("batch_id")
         .mode(SaveMode.Overwrite).parquet(auditDir)
     }
 
@@ -269,8 +296,8 @@ object Pipeline {
 }
 
 /** input row of the observed lineage aggregate (field order = call order) */
-private[hotdog] case class LineageIn(pid: Int, topic: String,
-    input_file: String, parse_ok: Boolean, mij: Long, mtnj: Long)
+private[hotdog] case class LineageIn(topic: String, input_file: String,
+    parse_ok: Boolean, mij: Long, mtnj: Long, tpf: Long)
 
 /** Per-(partition, topic, input_file) lineage slots as ONE observed-metrics
   * aggregate riding the sink write (see [[Pipeline.writeBatch]]). Buffer =
@@ -290,17 +317,46 @@ private[hotdog] object LineageAgg
   val Sep: String = 0.toChar.toString
   /** encodes a NULL topic (unrouted rows) in the composite key */
   val NullTopic: String = 1.toChar.toString
+  /** counters per slot: rows, parse_ok rows, merge_of_invalid_json,
+    * merge_target_not_json, topic_parse_failed */
+  val Slots = 5
+
+  /** The observed slots with the partition id summed out (each
+    * (pid, topic, file) slot is exactly-once): (topic, input_file) →
+    * counters, topic null for unrouted rows. */
+  def fold(slots: collection.Map[String, collection.Seq[Long]])
+      : collection.Map[(String, String), Array[Long]] = {
+    val folded = scala.collection.mutable.HashMap.empty[(String, String), Array[Long]]
+    slots.foreach { case (k, v) =>
+      val parts = k.split(Sep, -1) // pid, topicEnc, file
+      val topic = if (parts(1) == NullTopic) null else parts(1)
+      val acc = folded.getOrElseUpdate((topic, parts(2)), new Array[Long](Slots))
+      var i = 0
+      while (i < Slots) { acc(i) += v(i); i += 1 }
+    }
+    folded
+  }
+
+  /** Folded slots summed over input files: one [[Stats.TopicCounts]] per topic. */
+  def perTopic(folded: collection.Map[(String, String), Array[Long]]): Seq[Stats.TopicCounts] =
+    folded.groupMapReduce(_._1._1)(_._2)((a, b) => a.zip(b).map { case (x, y) => x + y })
+      .toSeq.map { case (t, c) => Stats.TopicCounts(t, c(0), c(1), c(2), c(3), c(4)) }
+
   override def zero: scala.collection.mutable.HashMap[String, Array[Long]] =
     scala.collection.mutable.HashMap.empty
   override def reduce(b: scala.collection.mutable.HashMap[String, Array[Long]],
       r: LineageIn): scala.collection.mutable.HashMap[String, Array[Long]] = {
-    val key = r.pid.toString + Sep +
+    // the partition of the task folding the row, never a `spark_partition_id()`
+    // column: over a driver-local input the optimizer folds that column into
+    // the relation as 0 for every row, and the tasks' slots would collide
+    val key = org.apache.spark.TaskContext.getPartitionId().toString + Sep +
       (if (r.topic == null) NullTopic else r.topic) + Sep + r.input_file
-    val acc = b.getOrElseUpdate(key, new Array[Long](4))
+    val acc = b.getOrElseUpdate(key, new Array[Long](Slots))
     acc(0) += 1L
     if (r.parse_ok) acc(1) += 1L
     acc(2) += r.mij
     acc(3) += r.mtnj
+    acc(4) += r.tpf
     b
   }
   override def merge(a: scala.collection.mutable.HashMap[String, Array[Long]],

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Running-aggregate statistics mirroring hotdog's /stats surface
   * (reference src/status.rs:184-213 for metric names, src/status.rs:170-181
-  * for the snapshot shape). ONE shuffle over the routed data (groupBy topic
-  * with map-side partial aggregation); all reshaping happens on the tiny
-  * (≤ #topics) aggregate.
+  * for the snapshot shape). The counters come per topic, from the sink
+  * write's observed lineage slots (`Pipeline.Result.stats`) or from one
+  * shuffle over the routed data ([[statsOf]]); one reshaping of the tiny
+  * (≤ #topics) per-topic counters ([[fromCounts]]) serves both.
   */
 object Stats {
 
@@ -22,28 +23,41 @@ object Stats {
     "error.internal_push_failed",
     "kafka.producer.sent")
 
-  /** (metric string, value long) from a Router.route output frame.
+  /** One topic's counters (`topic` null: the rows no rule emitted): the
+    * row count, its `parse_ok` rows and the three error counters. The row
+    * shape of [[perTopicAgg]] and of a topic's folded lineage slots
+    * (`Pipeline.writeBatch`). */
+  final case class TopicCounts(topic: String, n: Long, parsed: Long,
+      mi: Long, mt: Long, tpf: Long)
+
+  /** (metric string, value long) from a Router.route output frame: a
+    * second pass over the data, which re-runs the cascade.
     *
     * ONE distributed job: groupBy(topic) with map-side partial agg, then the
-    * ≤(#topics+1)-row result is collected and reshaped driver-side — the
-    * exact analog of the reference's in-memory counter map (src/status.rs),
-    * and it avoids caching the aggregate just to scan it twice. */
-  def statsOf(routed: DataFrame): DataFrame = {
-    val spark = routed.sparkSession
+    * ≤(#topics+1)-row result is collected and reshaped driver-side by
+    * [[fromCounts]] — the exact analog of the reference's in-memory counter
+    * map (src/status.rs). `Pipeline.Result.stats` reshapes the sink write's
+    * observed slots instead and only falls back to this; it stays as the
+    * independent reference the slot-derived counters are checked against. */
+  def statsOf(routed: DataFrame): DataFrame =
+    fromCounts(routed.sparkSession, perTopicAgg(routed).collect().toSeq.map(r =>
+      TopicCounts(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5))))
+
+  /** The `/stats` (metric, value) frame of per-topic counters, however they
+    * were counted: one `kafka.submitted.<topic>` per routed topic (sorted),
+    * then the totals, then the [[ZeroSlots]]. A local frame: no job. */
+  def fromCounts(spark: SparkSession, per: Seq[TopicCounts]): DataFrame = {
     import spark.implicits._
-
-    val per = perTopicAgg(routed).collect()
-
-    val perTopic = per.toSeq.filter(!_.isNullAt(0))
-      .map(r => ("kafka.submitted." + r.getString(0), r.getLong(1)))
-      .sortBy(_._1)
+    val routed = per.filter(_.topic != null)
+    val perTopic = routed.map(c => ("kafka.submitted." + c.topic, c.n)).sortBy(_._1)
     val totals = Seq(
-      "kafka.submitted" -> per.filter(!_.isNullAt(0)).map(_.getLong(1)).sum,
-      "lines" -> per.map(_.getLong(2)).sum,
-      "error.log_parse" -> per.map(r => r.getLong(1) - r.getLong(2)).sum,
-      "error.merge_of_invalid_json" -> per.map(_.getLong(3)).sum,
-      "error.merge_target_not_json" -> per.map(_.getLong(4)).sum,
-      "error.topic_parse_failed" -> per.map(_.getLong(5)).sum)
+      "kafka.submitted" -> routed.map(_.n).sum,
+      "lines" -> per.map(_.parsed).sum,
+      "error.log_parse" -> per.map(c => c.n - c.parsed).sum,
+      "error.merge_of_invalid_json" -> per.map(_.mi).sum,
+      "error.merge_target_not_json" -> per.map(_.mt).sum,
+      "error.topic_parse_failed" -> per.map(_.tpf).sum)
     (perTopic ++ totals ++ ZeroSlots.map(_ -> 0L)).toDF("metric", "value")
   }
 

@@ -26,14 +26,21 @@ object graftshim {
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
   /** How long [[observedOr]] waits for an observed metric. */
-  private val ObservedWaitSeconds = 10
+  val ObservedWaitSeconds = 10
+
+  private val fallbacks = new java.util.concurrent.atomic.AtomicLong
+
+  /** How many times [[observedOr]] has taken its fallback in this JVM: a
+    * degraded path is counted, not only printed. */
+  def observedFallbacks: Long = fallbacks.get
 
   /** `use` of metric `metric` of `obs`, whose observed dataset's action
     * has just returned. Spark delivers observed metrics from an async
     * listener just after the action, so this waits for them, up to
     * [[ObservedWaitSeconds]]. A metric that does not arrive (or is null) is
-    * never skipped silently: one loud line ending in `fallbackNote`, then
-    * the caller's exact recompute `fallback`. */
+    * never skipped silently: it is counted in [[observedFallbacks]], one
+    * loud line ending in `fallbackNote` is printed, then the caller's exact
+    * recompute `fallback` runs. */
   def observedOr[A, T](obs: Observation, metric: String, fallbackNote: String)(
       use: A => T)(fallback: => T): T = {
     val delivered =
@@ -45,6 +52,7 @@ object graftshim {
     delivered match {
       case Some(v) => use(v.asInstanceOf[A])
       case None =>
+        fallbacks.incrementAndGet()
         System.err.println(s"[graft] WARN observed metric $metric of ${obs.name} " +
           s"not delivered within ${ObservedWaitSeconds}s; $fallbackNote")
         fallback

@@ -67,6 +67,16 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
       graftshim.executionListeners(spark).distinct.size)
   }
 
+  test("Bench's order runs every streaming query after every batch query") {
+    val streaming = Set("hd_window", "hd_state_totals", "dd_stream_dedup",
+      "ev_sessions_stream", "ev_stream_join")
+    val order = Bench.ordered(None, "test").map(_._1)
+    assert(streaming.subsetOf(order.toSet))
+    val lastBatch = order.lastIndexWhere(!streaming(_))
+    val late = streaming.filter(order.indexOf(_) < lastBatch)
+    assert(late.isEmpty, s"${late.mkString(", ")} run before batch query ${order(lastBatch)}")
+  }
+
   test("an unknown query name fails loudly, naming it") {
     val e = intercept[IllegalArgumentException](
       Trace.run(spark, sf, Some(Set("hd_route_rows", "no_such_query")))(_ => ()))

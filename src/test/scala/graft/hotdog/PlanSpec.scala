@@ -2,6 +2,7 @@ package graft.hotdog
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
 import java.nio.file.Files
 
 /** Physical-plan assertions — the structural properties that make the
@@ -98,9 +99,9 @@ class PlanSpec extends AnyFunSuite {
       clock = lit("2024-01-01T00:00:00.000000+00:00"))
     def auditRows(dir: String) = spark.read.parquet(dir)
       .select("topic", "input_file", "rows", "parsed_rows",
-        "merge_invalid_json", "merge_target_not_json", "batch_id")
+        "merge_invalid_json", "merge_target_not_json", "topic_parse_failed", "batch_id")
       .collect().map(r => (Option(r.getString(0)), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
+        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
     // single pass: the audit is observed on the sink write
     Pipeline.writeBatch(routed, s"$tmp/out-obs", s"$tmp/audit-obs", 3L)
     // reference: two passes — the fan-out write, then the DataFrame
@@ -120,6 +121,44 @@ class PlanSpec extends AnyFunSuite {
     val b = spark.read.parquet(s"$tmp/out-ref")
       .select("doc_id", "topic", "output").collect().map(_.toString).sorted
     assert(a.sameElements(b))
+  }
+
+  test("one pass per Main batch: /stats from the sink write's slots, an audit with no shuffle") {
+    val tmp = Files.createTempDirectory("graft-onepass").toString
+    val clock = lit("2024-01-01T00:00:00.000000+00:00")
+    def seqs = spark.read.parquet(corpusDir)
+    val dim = Corpus.sourceDim(spark)
+    def json(stats: org.apache.spark.sql.DataFrame) =
+      Stats.formatJson(Stats.withSentTimer(stats, 42L))
+    val want = json(Stats.statsOf(Router.route(seqs, Configs.flagship, clock)))
+    val rec = graft.Trace.install(spark)
+    try {
+      val fallbacks = graftshim.observedFallbacks
+      val result = Pipeline.run(seqs, Configs.flagship, Some(dim), clock)
+      rec.take(spark)
+      Pipeline.writeBatch(result.routed, s"$tmp/routed", s"$tmp/audit", 1L)
+      val written = rec.take(spark)
+      val got = json(result.stats)
+      assert(rec.take(spark).jobs == 0, "result.stats started Spark jobs")
+      assert(got == want)
+      assert(graftshim.observedFallbacks == fallbacks, "writeBatch took its recompute fallback")
+      info(s"writeBatch: ${written.jobs} Spark jobs; stages: " +
+        written.stages.map(st => s"${st.name} (${st.tasks} tasks)").mkString("; "))
+
+      val writes = written.plans.filter(_.operators.exists(_.name.endsWith("InsertIntoHadoopFsRelationCommand")))
+      assert(writes.size == 2, s"expected the sink and the audit write: $writes")
+      def exchanges(p: graft.Trace.Plan) = p.operators.map(_.name).filter(_.contains("Exchange"))
+      val Seq(sink, audit) = writes
+      assert(exchanges(sink).nonEmpty, sink) // the sink repartitions: the check sees a shuffle
+      assert(exchanges(audit).isEmpty, s"audit write shuffles: ${audit.operators.map(_.name)}")
+
+      // with no write before it, `stats` is statsOf at once: no wait
+      val unwritten = Pipeline.run(seqs, Configs.flagship, Some(dim), clock)
+      val t0 = System.nanoTime()
+      assert(json(unwritten.stats) == want)
+      assert((System.nanoTime() - t0) / 1e9 < graftshim.ObservedWaitSeconds)
+      assert(graftshim.observedFallbacks == fallbacks)
+    } finally graft.Trace.uninstall(spark)
   }
 
   test("resumable batches: completed batch_ids are skipped") {

@@ -1,8 +1,8 @@
 #!/bin/bash
 # Two-cluster-size scaling evidence for one campaign of graft.scaling.Runner
-# (flagship, stream, dedup, tok, ann, ev, batch): the same job on the same
-# corpus at N and 4N cores, each in its own JVM, then the cross-level
-# equality check, the verification pass and the report.
+# (flagship or stream): the same job on the same corpus at N and 4N cores,
+# each in its own JVM, then the cross-level equality check, the
+# verification pass and the report.
 #
 #   bash BENCH/run_scaling.sh CAMPAIGN SIZE [N]      N defaults to nproc/4
 #   bash BENCH/run_scaling.sh CAMPAIGN SIZE audit    one run + verification

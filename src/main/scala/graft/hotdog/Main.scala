@@ -51,7 +51,7 @@ object Main {
     * the corpus fuses into the route's codegen stage, one method over
     * HotSpot's 8,000 B `HugeMethodLimit` that is then never JIT-compiled. */
   def input(spark: SparkSession, given: Option[String], rows: Long, out: String): DataFrame =
-    spark.read.parquet(given.getOrElse {
+    spark.read.schema(model.sequencesSchema).parquet(given.getOrElse {
       Corpus.sequences(spark, rows).write.mode("overwrite").parquet(s"$out/input")
       s"$out/input"
     })

@@ -68,16 +68,15 @@ object Pipeline {
   private def enrich(routed0: DataFrame, dim: Option[DataFrame]): DataFrame =
     dim.fold(routed0)(d => routed0.join(broadcast(d), Seq("source"), "left"))
 
-  /** Fan-out sink (S5): routed rows partitioned by topic, parquet.
-    * `saltBuckets` bounds the number of write tasks per topic so a hot
-    * topic parallelizes; AQE coalesces small ones. Returns per-topic counts
-    * as observed by the write (for count-parity checks). */
-  /** @return wall time of the sink write in microseconds (feeds the
+  /** Fan-out sink (S5): the emitted rows' (doc_id, source, output) as
+    * parquet, partitioned by batch_id and topic. `saltBuckets` bounds the
+    * number of write tasks per topic so a hot topic parallelizes; AQE
+    * coalesces small ones.
+    * @return wall time of the sink write in microseconds (feeds the
     *         kafka.producer.sent timer slot — reference src/kafka.rs:176-183
     *         keeps the LAST send duration; we keep the last batch's). */
   def writeFanOut(routed: DataFrame, outDir: String, batchId: Long,
-      saltBuckets: Int = 0,
-      columns: Seq[String] = Seq("doc_id", "source", "output")): Long = {
+      saltBuckets: Int = 0): Long = {
     // saltBuckets <= 0 ⇒ track spark.sql.shuffle.partitions: the write
     // stage's task count IS the repartition's partition count, and a salt
     // space smaller than it leaves reducers empty while a fixed 32 pins
@@ -88,12 +87,12 @@ object Pipeline {
       if (saltBuckets > 0) saltBuckets
       else routed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Kafka-parity payload is (topic, output); doc_id/source are lineage.
-    // `tokens` is intentionally NOT shipped by default — the equality
-    // invariant is checked on the routed frame (cheap, pre-shuffle), and
-    // shipping the token arrays through the sink shuffle would triple the
-    // written bytes for no consumer benefit. Pass columns=... to override.
+    // `tokens` is intentionally NOT shipped — the equality invariant is
+    // checked on the routed frame (cheap, pre-shuffle), and shipping the
+    // token arrays through the sink shuffle would triple the written bytes
+    // for no consumer benefit.
     val emitted = emittedOnly(routed)
-      .select((columns :+ "topic").distinct.map(col): _*)
+      .select(col("doc_id"), col("source"), col("output"), col("topic"))
       .withColumn("batch_id", lit(batchId))
     withConf(routed.sparkSession, DynamicOverwrite) {
       val t0 = System.nanoTime()
@@ -164,7 +163,10 @@ object Pipeline {
     * deterministic, so a re-executed task contributes byte-identical
     * slots and the merge (map union) is idempotent — the north_rule's
     * "every stage emits per-partition lineage and metric rows", with the
-    * metric channel being Spark's observed-metrics accumulator.
+    * metric channel being Spark's observed-metrics accumulator. A
+    * re-executed task whose slots differ (a non-deterministic upstream)
+    * poisons the observation ([[LineageAgg.merge]]), and the batch takes
+    * the counted recompute fallback of [[auditObserved]].
     *
     * The same slots are the batch's `/stats`: when `routed` is the `routed`
     * of a [[run]] result, the write observes the rows below its enrich join
@@ -173,8 +175,7 @@ object Pipeline {
     * so a `Main` batch evaluates the cascade exactly once.
     * @return sink write micros (the kafka.producer.sent timer slot). */
   def writeBatch(routed: DataFrame, outDir: String, auditDir: String,
-      batchId: Long, saltBuckets: Int = 0): Long = {
-    val spark = routed.sparkSession
+      batchId: Long): Long = {
     val handoff = Option(handoffs.get(routed))
     val below = handoff.fold(routed)(_.routed0)
     val obs = org.apache.spark.sql.Observation(
@@ -189,19 +190,29 @@ object Pipeline {
         col("err_topic_parse_failed").cast("long")).as("lineage"))
     // the same rows as `routed`: the broadcast join is narrow, so a row's
     // task and input file are the same below it as above it
-    val micros = writeFanOut(enrich(observed, handoff.flatMap(_.dim)), outDir,
-      batchId, saltBuckets)
-    // the exact-recompute fallback re-runs the FULL cascade — the double
-    // evaluation the observed audit exists to eliminate, so it is loud
-    // (ADVICE r4): in a streaming bench it would double every batch's cost
+    val micros = writeFanOut(enrich(observed, handoff.flatMap(_.dim)), outDir, batchId)
+    auditObserved(obs, routed, auditDir, batchId)
+    micros
+  }
+
+  /** The audit, and the `/stats` counters handed to the [[run]] result of
+    * `routed`, from the lineage slots `obs` observed on the write of
+    * `routed`. Slots that were not delivered, or that a slot collision
+    * poisoned (then [[LineageAgg.finish]] delivers null), take the counted
+    * fallback: [[writeAudit]] recomputes the audit, and `stats` stays
+    * [[Stats.statsOf]]. The fallback re-runs the FULL cascade — the double
+    * evaluation the observed audit exists to eliminate, so it is loud
+    * (ADVICE r4): in a streaming bench it would double every batch's cost. */
+  private[hotdog] def auditObserved(obs: org.apache.spark.sql.Observation,
+      routed: DataFrame, auditDir: String, batchId: Long): Unit = {
+    val handoff = Option(handoffs.get(routed))
     org.apache.spark.sql.graftshim.observedOr(obs, "lineage",
         s"batch $batchId: falling back to a full audit recompute (cascade runs twice)") {
       (slots: scala.collection.Map[String, scala.collection.Seq[Long]]) =>
         val folded = LineageAgg.fold(slots)
-        writeAuditRows(spark, folded, auditDir, batchId)
+        writeAuditRows(routed.sparkSession, folded, auditDir, batchId)
         handoff.foreach(_.observed = Some(LineageAgg.perTopic(folded)))
-    }(writeAudit(below, auditDir, batchId))
-    micros
+    }(writeAudit(handoff.fold(routed)(_.routed0), auditDir, batchId))
   }
 
   /** audit schema shared by the two writers (partition col batch_id and
@@ -306,7 +317,8 @@ private[hotdog] case class LineageIn(topic: String, input_file: String,
   * different tasks carry DISJOINT pid-prefixed keys, so merge is map union
   * — and a re-executed task's slots are byte-identical (deterministic
   * partition input), making the union idempotent: exactly-once lineage by
-  * construction, not by accumulator bookkeeping. */
+  * construction, not by accumulator bookkeeping. Slots that differ poison
+  * the buffer ([[merge]]), and a poisoned buffer finishes as null. */
 private[hotdog] object LineageAgg
     extends org.apache.spark.sql.expressions.Aggregator[
       LineageIn,
@@ -320,6 +332,8 @@ private[hotdog] object LineageAgg
   /** counters per slot: rows, parse_ok rows, merge_of_invalid_json,
     * merge_target_not_json, topic_parse_failed */
   val Slots = 5
+  /** the key that marks a poisoned buffer; slot keys start with a pid */
+  val Poison: String = Sep + "poison"
 
   /** The observed slots with the partition id summed out (each
     * (pid, topic, file) slot is exactly-once): (topic, input_file) →
@@ -363,25 +377,32 @@ private[hotdog] object LineageAgg
       b: scala.collection.mutable.HashMap[String, Array[Long]]): scala.collection.mutable.HashMap[String, Array[Long]] = {
     // keys are disjoint across tasks (pid-prefixed); a duplicate key can
     // only be a re-executed task's slot, byte-identical because partition
-    // input is deterministic. ASSERT that instead of assuming it: if any
+    // input is deterministic. CHECK that instead of assuming it: if any
     // upstream op ever turns non-deterministic (sample, round-robin
-    // repartition), the audit must fail loudly, not silently diverge from
-    // the sink (ADVICE r4).
+    // repartition), the audit must not silently diverge from the sink
+    // (ADVICE r4). Not by throwing: this merge runs in Spark's driver-side
+    // accumulator merge, which logs an exception and drops the task's slots,
+    // so the observation would arrive short. The buffer is poisoned
+    // instead, and the batch takes its counted recompute fallback.
     b.foreach { case (k, v) =>
       a.get(k) match {
         case None => a.update(k, v)
-        case Some(prev) =>
-          require(java.util.Arrays.equals(prev, v),
-            s"lineage slot collision with differing counts for key " +
-              s"${k.replace(Sep, "|").replace(NullTopic, "<null>")}: " +
-              s"${prev.mkString(",")} vs ${v.mkString(",")} — an upstream " +
-              "op is non-deterministic; audit counts would diverge from the sink")
+        case Some(prev) if !java.util.Arrays.equals(prev, v) =>
+          System.err.println(s"[graft] WARN lineage slot collision with differing counts " +
+            s"for key ${k.replace(Sep, "|").replace(NullTopic, "<null>")}: " +
+            s"${prev.mkString(",")} vs ${v.mkString(",")} — an upstream op is " +
+            "non-deterministic; the observed audit is poisoned")
+          a.update(Poison, Array.emptyLongArray)
+        case _ =>
       }
     }
     a
   }
+  /** null for a poisoned buffer: an observed metric that is null is a
+    * missing one to `graftshim.observedOr` */
   override def finish(b: scala.collection.mutable.HashMap[String, Array[Long]]): Map[String, Seq[Long]] =
-    b.iterator.map { case (k, v) => k -> v.toSeq }.toMap
+    if (b.contains(Poison)) null
+    else b.iterator.map { case (k, v) => k -> v.toSeq }.toMap
   override def bufferEncoder: org.apache.spark.sql.Encoder[scala.collection.mutable.HashMap[String, Array[Long]]] =
     org.apache.spark.sql.Encoders.kryo[scala.collection.mutable.HashMap[String, Array[Long]]]
   override def outputEncoder: org.apache.spark.sql.Encoder[Map[String, Seq[Long]]] =

@@ -4,10 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** A materialized corpus: the campaign's named tables under `dir`. */
+/** A materialized corpus: `size` rows of sequences, parquet under `dir`. */
 final case class Input(dir: String, size: Long) {
-  def table(s: SparkSession, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name")
+  def sequences(s: SparkSession): DataFrame = s.read.parquet(dir)
 }
 
 /** Outcome of a campaign's untimed verification pass: report lines (each a
@@ -20,28 +19,23 @@ final case class Verification(lines: Seq[String], ok: Boolean)
 trait Campaign {
   /** command-line name; also names the corpus and scratch directories */
   def name: String
-  /** corpus size of the warm-up runs (the runner caps it at the timed size) */
-  def warmSize: Long
   /** session confs beyond the runner's shared ones */
   def conf: Seq[(String, String)] = Nil
-  /** the timed jobs; each gets the whole protocol in turn (ANN times two) */
-  def jobs: Seq[String] = Seq(name)
-  /** the corpus tables of `size` units, by name */
-  def corpus(s: SparkSession, size: Long): Seq[(String, DataFrame)]
-  /** one execution of `job`, writing any output under `out` (emptied
-    * before each run). Only the call is timed: the returned thunk reads the
-    * run's counters after the clock stops. */
-  def run(s: SparkSession, job: String, in: Input, out: String): () => Map[String, Long]
-  /** units one run processes, by rate-column label (reported per second) */
-  def units(size: Long, c: Map[String, Long]): Seq[(String, Double)]
+  /** the corpus of `size` sequences */
+  def corpus(s: SparkSession, size: Long): DataFrame
+  /** one execution of the timed job, writing its output under `out`
+    * (emptied before each run). Only the call is timed: the returned thunk
+    * reads the run's counters, `routed.<topic>` among them, after the clock
+    * stops. */
+  def run(s: SparkSession, in: Input, out: String): () => Map[String, Long]
   /** the report's heading and job description */
   def header(size: Long, c: Map[String, Long]): String
   /** the untimed verification/audit pass over the corpus */
   def verify(s: SparkSession, in: Input, c: Map[String, Long]): Verification
 }
 
-/** Warm-up and trial timings of one job at one level. */
-final case class Timing(job: String, warmups: Seq[Double], trials: Seq[Double]) {
+/** Warm-up and trial timings of the job at one level. */
+final case class Timing(warmups: Seq[Double], trials: Seq[Double]) {
   def best: Double = trials.min
   def median: Double = trials.sorted.apply(trials.length / 2)
   def spreadPct: Double = Protocol.spread(trials.sorted.take(Protocol.MinTrials)) * 100.0
@@ -49,7 +43,7 @@ final case class Timing(job: String, warmups: Seq[Double], trials: Seq[Double]) 
 
 /** What one level run leaves for `combine`. */
 final case class Fragment(campaign: String, size: Long, cores: Int,
-    timings: Seq[Timing], counters: Map[String, Long])
+    timing: Timing, counters: Map[String, Long])
 
 /** The one timing protocol every campaign is measured under:
   *  1. warm-ups on the small warm corpus (identical plan shape, so the
@@ -111,17 +105,19 @@ object Protocol {
   */
 object Runner {
   val ShufflePartitions = 256
-  val Campaigns: Seq[Campaign] =
-    Seq(FlagshipCampaign, StreamCampaign, DedupCampaign, TokCampaign,
-      AnnCampaign, EvCampaign, BatchCampaign)
+  /** corpus size of the warm-up runs, capped at the timed size */
+  val WarmSize = 2000000L
+  val Campaigns: Seq[Campaign] = Seq(FlagshipCampaign, StreamCampaign)
 
   def campaign(name: String): Campaign = Campaigns.find(_.name == name)
     .getOrElse(sys.error(s"unknown campaign '$name'; one of ${Campaigns.map(_.name).mkString(", ")}"))
 
   // corpus, shuffle and scratch on tmpfs: the one virtio disk sporadically
-  // degrades to ~1 MB/s and bills 300 s cold reads to random trials
-  private def corpusDir(c: Campaign, size: Long) = s"/dev/shm/graft-${c.name}-$size"
-  private def warmSizeOf(c: Campaign, size: Long) = math.min(c.warmSize, size)
+  // degrades to ~1 MB/s and bills 300 s cold reads to random trials. The
+  // corpus is one parquet dir; `graft-NAME-SIZE` held the older layout of
+  // named table subdirs, which this name never reads as a corpus.
+  private def corpusDir(c: Campaign, size: Long) = s"/dev/shm/graft-corpus-${c.name}-$size"
+  private def warmSizeOf(size: Long) = math.min(WarmSize, size)
   private def committed(dir: String) = Files.exists(Paths.get(dir, "_SUCCESS"))
   private def delete(dir: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -152,15 +148,14 @@ object Runner {
     Input(dir, size)
   }
 
-  /** write the timed and the warm corpus once; `_SUCCESS` marks a whole one */
+  /** write the timed and the warm corpus once; the write's own `_SUCCESS`
+    * marks a whole one */
   private def gen(c: Campaign, size: Long): Unit = {
     val s = session(c, Runtime.getRuntime.availableProcessors)
-    for (n <- Seq(size, warmSizeOf(c, size)).distinct; dir = corpusDir(c, n)
+    for (n <- Seq(size, warmSizeOf(size)).distinct; dir = corpusDir(c, n)
          if !committed(dir)) {
       delete(dir)
-      c.corpus(s, n).foreach { case (t, df) =>
-        df.write.mode("overwrite").parquet(s"$dir/$t") }
-      Files.createFile(Paths.get(dir, "_SUCCESS"))
+      c.corpus(s, n).write.parquet(dir)
       printStages(s)
     }
     s.stop()
@@ -168,36 +163,31 @@ object Runner {
 
   private def level(c: Campaign, size: Long, cores: Int): Fragment = {
     val full = corpusOf(c, size)
-    val warm = corpusOf(c, warmSizeOf(c, size))
+    val warm = corpusOf(c, warmSizeOf(size))
     val s = session(c, cores)
     val out = s"/dev/shm/graft-scaling-out-${c.name}-$cores"
-    var counters = Map.empty[String, Long]
-    val timings = c.jobs.map { job =>
-      var seen: Option[Map[String, Long]] = None
-      def once(in: Input, record: Boolean): Double = {
-        delete(out)
-        val t0 = System.nanoTime()
-        val read = c.run(s, job, in, out)
-        val t = (System.nanoTime() - t0) / 1e9
-        printStages(s)
-        println(f"RUN ${c.name}/$job size=${in.size} cores=$cores wall=$t%.2fs")
-        if (record) {
-          val got = read()
-          // every full-size run of a level must produce the same counters
-          seen.foreach(prev => require(prev == got, diff(s"$job runs at $cores cores", prev, got)))
-          seen = Some(got)
-        }
-        System.gc() // let the ContextCleaner free the old shuffle files
-        t
+    var seen: Option[Map[String, Long]] = None
+    def once(in: Input, record: Boolean): Double = {
+      delete(out)
+      val t0 = System.nanoTime()
+      val read = c.run(s, in, out)
+      val t = (System.nanoTime() - t0) / 1e9
+      printStages(s)
+      println(f"RUN ${c.name} size=${in.size} cores=$cores wall=$t%.2fs")
+      if (record) {
+        val got = read()
+        // every full-size run of a level must produce the same counters
+        seen.foreach(prev => require(prev == got, diff(s"runs at $cores cores", prev, got)))
+        seen = Some(got)
       }
-      val (warmups, trials) =
-        Protocol.measure(() => once(warm, record = false), () => once(full, record = true))
-      counters ++= seen.get
-      Timing(job, warmups, trials)
+      System.gc() // let the ContextCleaner free the old shuffle files
+      t
     }
+    val (warmups, trials) =
+      Protocol.measure(() => once(warm, record = false), () => once(full, record = true))
     delete(out)
     s.stop()
-    Fragment(c.name, size, cores, timings, counters)
+    Fragment(c.name, size, cores, Timing(warmups, trials), seen.get)
   }
 
   private def diff(what: String, a: Map[String, Long], b: Map[String, Long]): String = {
@@ -221,10 +211,8 @@ object Runner {
   private def arr(ts: Seq[Double]) = ts.map(t => f"$t%.4f").mkString("[", ",", "]")
 
   def toJson(f: Fragment): String = {
-    val ts = f.timings.map(t =>
-      s"""{"job":"${t.job}","warmups":${arr(t.warmups)},"trials":${arr(t.trials)}}""")
     val cs = f.counters.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
-    s"""{"campaign":"${f.campaign}","size":${f.size},"cores":${f.cores},"timings":${ts.mkString("[", ",", "]")},"counters":${cs.mkString("{", ",", "}")}}"""
+    s"""{"campaign":"${f.campaign}","size":${f.size},"cores":${f.cores},"warmups":${arr(f.timing.warmups)},"trials":${arr(f.timing.trials)},"counters":${cs.mkString("{", ",", "}")}}"""
   }
 
   def fromJson(json: String): Fragment = {
@@ -232,23 +220,21 @@ object Runner {
     require(n != null && n.isObject, s"bad fragment: $json")
     def darr(a: com.fasterxml.jackson.databind.JsonNode): Seq[Double] =
       (0 until a.size()).map(a.get(_).doubleValue())
-    val ts = n.get("timings")
-    val timings = (0 until ts.size()).map(ts.get).map(t =>
-      Timing(t.get("job").textValue(), darr(t.get("warmups")), darr(t.get("trials"))))
     val c = n.get("counters")
     val counters = c.fieldNames().asScala.map(k => k -> c.get(k).longValue()).toMap
     Fragment(n.get("campaign").textValue(), n.get("size").longValue(),
-      n.get("cores").intValue(), timings, counters)
+      n.get("cores").intValue(), Timing(darr(n.get("warmups")), darr(n.get("trials"))),
+      counters)
   }
 
   // ---- report ----
 
   private def secs(ts: Seq[Double]) = ts.map(t => f"$t%.1f").mkString(", ")
 
-  /** the shared report parts of one job: run table, protocol lines, efficiency */
-  private def jobSection(c: Campaign, job: String, a: Fragment, b: Fragment): (String, Double, Double) = {
-    val (ta, tb) = (a.timings.find(_.job == job).get, b.timings.find(_.job == job).get)
-    val units = c.units(a.size, a.counters)
+  /** the shared report parts: run table, protocol lines, efficiency */
+  private def jobSection(a: Fragment, b: Fragment): (String, Double, Double) = {
+    val (ta, tb) = (a.timing, b.timing)
+    val units = Seq("input rows/s" -> a.size.toDouble, "routed rows/s" -> Sink.routed(a.counters).toDouble)
     val eff = ta.best / (4.0 * tb.best)
     val effMedian = ta.median / (4.0 * tb.median)
     def row(tag: String, f: Fragment, t: Timing) =
@@ -257,8 +243,7 @@ object Runner {
         .mkString("| ", " | ", " |")
     val cols = Seq("run", "master", "wall min (s)", "wall median (s)") ++
       units.map(_._1) :+ s"best-${Protocol.MinTrials} spread"
-    val title = if (c.jobs.size > 1) s"### $job\n\n" else ""
-    val md = title +
+    val md =
       f"""|${cols.mkString("| ", " | ", " |")}
          ||${cols.map(_ => "---").mkString("|")}|
          |${row("N ", a, ta)}
@@ -304,33 +289,28 @@ object Runner {
     val v = c.verify(s, in, a.counters)
     printStages(s)
     s.stop()
-    val sections = c.jobs.map(jobSection(c, _, a, b))
-    val md = Seq(c.header(a.size, a.counters), ProtocolNote,
-      sections.map(_._1).mkString("\n"),
+    val (section, eff, effMedian) = jobSection(a, b)
+    val md = Seq(c.header(a.size, a.counters), ProtocolNote, section,
       s"## Verification (untimed; counters equal at both levels)\n\n${verification(v)}")
       .mkString("\n")
     write(outMd, md)
-    val effs = c.jobs.zip(sections).flatMap { case (j, (_, e, em)) =>
-      val p = if (c.jobs.size > 1) s"${j}_" else ""
-      Seq(s"${p}scaling_efficiency" -> e, s"${p}scaling_efficiency_median" -> em)
-    }
     println(jsonLine(Seq("campaign" -> c.name, "size" -> a.size,
-      "cores_n" -> a.cores, "cores_4n" -> b.cores) ++ effs ++
-      Seq("verified" -> v.ok) ++ a.counters.toSeq.sorted))
+      "cores_n" -> a.cores, "cores_4n" -> b.cores, "scaling_efficiency" -> eff,
+      "scaling_efficiency_median" -> effMedian, "verified" -> v.ok) ++ a.counters.toSeq.sorted))
     require(v.ok, s"${c.name} verification failed: see $outMd")
   }
 
-  /** one run of each job (no warm-ups or trials) plus the verification pass
-    * at `size`, appended to `outMd`: re-proves the scale-dependent claims
-    * (recall, skew bounds, exactness) at sizes whose two-level timing would
-    * not fit a session */
+  /** one run of the job (no warm-ups or trials) plus the verification pass
+    * at `size`, appended to `outMd`: re-proves the verified claims at sizes
+    * whose two-level timing would not fit a session */
   private def audit(c: Campaign, size: Long, outMd: String): Unit = {
     val in = corpusOf(c, size)
     val cores = Runtime.getRuntime.availableProcessors
     val s = session(c, cores)
     val out = s"/dev/shm/graft-scaling-out-${c.name}-audit"
     val t0 = System.nanoTime()
-    val counters = c.jobs.map(j => { delete(out); c.run(s, j, in, out)() }).reduce(_ ++ _)
+    delete(out)
+    val counters = c.run(s, in, out)()
     val wall = (System.nanoTime() - t0) / 1e9
     val v = c.verify(s, in, counters)
     printStages(s)
@@ -338,7 +318,7 @@ object Runner {
     s.stop()
     val md =
       f"""
-         |## Full-scale audit: $size%d (one run of each job, local[$cores%d], $wall%.1f s)
+         |## Full-scale audit: $size%d (one run, local[$cores%d], $wall%.1f s)
          |
          |${verification(v)}""".stripMargin
     val prev = if (Files.exists(Paths.get(outMd))) Files.readString(Paths.get(outMd)) else ""

@@ -54,7 +54,7 @@ object graftshim {
       case None =>
         fallbacks.incrementAndGet()
         System.err.println(s"[graft] WARN observed metric $metric of ${obs.name} " +
-          s"not delivered within ${ObservedWaitSeconds}s; $fallbackNote")
+          s"not delivered within ${ObservedWaitSeconds}s, or null; $fallbackNote")
         fallback
     }
   }

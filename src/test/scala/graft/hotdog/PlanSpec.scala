@@ -205,4 +205,15 @@ class PlanSpec extends AnyFunSuite {
     info(s"largest generated method per codegen stage: ${sizes.mkString(", ")} B")
     assert(sizes.nonEmpty && sizes.max < 8000, s"largest generated methods: $sizes")
   }
+
+  test("Main.input reads a given corpus with the known schema: no footer-scan job") {
+    val dir = corpusDir
+    val rec = graft.Trace.install(spark)
+    try {
+      rec.take(spark)
+      val seqs = Main.input(spark, Some(dir), 0L, "unused")
+      assert(rec.take(spark).jobs == 0, "Main.input started a Spark job")
+      assert(seqs.schema == spark.read.parquet(dir).schema)
+    } finally graft.Trace.uninstall(spark)
+  }
 }

@@ -2,7 +2,7 @@ package graft.hotdog
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, graftshim}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -148,4 +148,63 @@ class StatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val json = derived(seqs, Configs.flagship, Some(Corpus.sourceDim(spark)), out)
     assert(metric(json, "lines") + metric(json, "error.log_parse") == 200000L)
   }
+
+  test("a lineage slot collision poisons the slots: the counted fallback, audit and /stats exact") {
+    type Buf = scala.collection.mutable.HashMap[String, Array[Long]]
+    val key = Seq("0", "t", "f").mkString(LineageAgg.Sep)
+    def partial(rows: Long): Buf = {
+      val b = LineageAgg.zero
+      b(key) = Array(rows, rows, 0L, 0L, 0L)
+      b
+    }
+    // a deterministic task run twice gives equal slots: the union is idempotent
+    assert(LineageAgg.finish(LineageAgg.merge(partial(3), partial(3))) ==
+      Map(key -> Seq(3L, 3L, 0L, 0L, 0L)))
+    // differing slots for one key poison the buffer, through any later merge
+    val poisoned = LineageAgg.merge(partial(3), partial(4))
+    assert(poisoned.contains(LineageAgg.Poison))
+    assert(LineageAgg.finish(poisoned) == null)
+    assert(LineageAgg.merge(LineageAgg.zero, LineageAgg.merge(partial(3), partial(4)))
+      .contains(LineageAgg.Poison))
+    assert(LineageAgg.finish(LineageAgg.merge(poisoned, partial(5))) == null)
+
+    // Spark's own driver-side merge: under a global sort the range
+    // partitioner's sample job runs the observed map side once more, and an
+    // upstream that differs between the two runs collides every slot
+    val obs = org.apache.spark.sql.Observation(s"collision_${System.nanoTime()}")
+    StatsSpec.firstStage.set(-1)
+    val firstRunOnly = udf { () =>
+      val stage = org.apache.spark.TaskContext.get.stageId
+      StatsSpec.firstStage.compareAndSet(-1, stage)
+      StatsSpec.firstStage.get == stage
+    }.asNondeterministic()
+    spark.range(0, 400, 1, 4)
+      .select(lit("t").as("topic"), lit("").as("input_file"), firstRunOnly().as("parse_ok"),
+        lit(0L).as("mij"), lit(0L).as("mtnj"), lit(0L).as("tpf"), col("id"))
+      .observe(obs, udaf(LineageAgg).apply(col("topic"), col("input_file"), col("parse_ok"),
+        col("mij"), col("mtnj"), col("tpf")).as("lineage"))
+      .orderBy(col("id").desc).write.format("noop").mode("overwrite").save()
+    assert(obs.get("lineage") == null, "the collision was dropped, not poisoned")
+
+    // the write of `routed` that delivered it takes the counted fallback
+    val seqs = Corpus.sequences(spark, 2000, seed = 11L)
+    val result = Pipeline.run(seqs, Configs.flagship, None, clock)
+    val out = tmp()
+    val fallbacks = graftshim.observedFallbacks
+    Pipeline.auditObserved(obs, result.routed, s"$out/audit", 0L)
+    assert(graftshim.observedFallbacks == fallbacks + 1)
+    Pipeline.writeAudit(Router.route(seqs, Configs.flagship, clock), s"$out/audit-ref", 0L)
+    def audit(dir: String) = spark.read.parquet(dir)
+      .select("topic", "input_file", "rows", "parsed_rows", "merge_invalid_json",
+        "merge_target_not_json", "topic_parse_failed", "batch_id")
+      .collect().map(_.toString).sorted.toSeq
+    assert(audit(s"$out/audit") == audit(s"$out/audit-ref"))
+    assert(Stats.formatJson(result.stats) ==
+      Stats.formatJson(Stats.statsOf(Router.route(seqs, Configs.flagship, clock))))
+  }
+}
+
+object StatsSpec {
+  /** the first stage a task of the collision test ran in */
+  val firstStage = new java.util.concurrent.atomic.AtomicInteger(-1)
 }

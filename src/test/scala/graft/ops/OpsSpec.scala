@@ -405,10 +405,40 @@ class OpsSpec extends AnyFunSuite {
     assert(out.map(_.getLong(0)).toSeq == Seq(100L, 0L, 66L, 0L, 100L, 0L))
   }
 
-  test("dedup campaign planted corpus: exact recall accounting at 20k docs") {
+  /** Planted near-dup docs, deterministic in `n`: every block of 100 doc
+    * ids plants one 4-member cluster (ids ≡ 0..3 mod 100). Members share 14
+    * of 15 words (word 7 is a per-member unique token), so each of the
+    * C(4,2)=6 intra-cluster pairs has 3-gram-shingle jaccard 10/16 = 62.5%,
+    * above a 60% threshold; non-members draw every word from their own id,
+    * so cross pairs have jaccard ≈ 0. Planted pairs number (n/100)·6. */
+  private def plantedDocs(s: org.apache.spark.sql.SparkSession, n: Long,
+      parts: Int): org.apache.spark.sql.DataFrame = {
+    val id = col("id")
+    // NB Column./ is FLOATING division — integer block arithmetic via mod
+    val block = id - (id % 100L)
+    val isMember = id % 100L < 4L
+    // members draw base words from the BLOCK seed (shared within the
+    // cluster), non-members from their own id. Position i draws from its
+    // OWN residue class (word index ≡ i mod 15), so no two positions of
+    // one doc collide — every planted pair's shingle sets differ in
+    // exactly the 3 trigrams covering position 7, jaccard 10/16 BY
+    // CONSTRUCTION (a uniform draw let ~0.2% of clusters collide two
+    // shared words, dropping those pairs below the verify threshold).
+    def word(i: Int) =
+      concat(lit("w"), pmod(xxhash64(col("seed"), lit(i)), lit(3333L)) * 15 + i)
+    val words = (0 until 15).map { i =>
+      if (i == 7) when(isMember, concat(lit("m"), id)).otherwise(word(i))
+      else word(i)
+    }
+    s.range(0, n, 1, parts)
+      .withColumn("seed", when(isMember, block).otherwise(id))
+      .select(id.as("doc_id"), concat_ws(" ", words: _*).as("text"))
+  }
+
+  test("planted near-dup corpus: exact recall accounting at 20k docs") {
     val spark = docs.sparkSession
     val n = 20000L
-    val c = graft.scaling.DedupCampaign.docs(spark, n, parts = 8)
+    val c = plantedDocs(spark, n, parts = 8)
     val pairs = Dedup.minhashNearDups(c, "doc_id", "text", 60, 64, 32, 3, None)
       .collect()
     val planted = pairs.filter(r =>

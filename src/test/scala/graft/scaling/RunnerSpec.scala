@@ -36,10 +36,9 @@ class RunnerSpec extends AnyFunSuite {
     assert(Protocol.MaxTrials == 6)
   }
 
-  private val frag = Fragment("ann", 200000L, 1,
-    Seq(Timing("lsh", Seq(3.5, 2.25, 2.125), Seq(1.5, 1.75, 1.625)),
-      Timing("ivf", Seq(8.0, 7.5), Seq(6.25, 6.0, 6.5))),
-    Map("lsh.checksum" -> -8123456789012L, "lsh.rows" -> 10000L, "ivf.rows" -> 9998L))
+  private val frag = Fragment("flagship", 200000L, 1,
+    Timing(Seq(3.5, 2.25, 2.125), Seq(1.5, 1.75, 1.625)),
+    Map("routed.hot" -> 131072L, "routed.cold" -> 9998L, "checksum" -> -8123456789012L))
 
   test("fragment JSON round-trips") {
     assert(Runner.fromJson(Runner.toJson(frag)) == frag)
@@ -49,12 +48,18 @@ class RunnerSpec extends AnyFunSuite {
     val big = frag.copy(cores = 4)
     Runner.checkLevels(frag, big)
     val e = intercept[IllegalArgumentException](
-      Runner.checkLevels(frag, big.copy(counters = big.counters + ("ivf.rows" -> 9997L))))
-    assert(e.getMessage.contains("ivf.rows: 9998 vs 9997"), e.getMessage)
+      Runner.checkLevels(frag, big.copy(counters = big.counters + ("routed.cold" -> 9997L))))
+    assert(e.getMessage.contains("routed.cold: 9998 vs 9997"), e.getMessage)
     val missing = intercept[IllegalArgumentException](
-      Runner.checkLevels(frag, big.copy(counters = big.counters - "lsh.rows")))
-    assert(missing.getMessage.contains("lsh.rows: 10000 vs -"), missing.getMessage)
+      Runner.checkLevels(frag, big.copy(counters = big.counters - "routed.hot")))
+    assert(missing.getMessage.contains("routed.hot: 131072 vs -"), missing.getMessage)
     intercept[IllegalArgumentException](Runner.checkLevels(frag, frag.copy(cores = 2)))
     intercept[IllegalArgumentException](Runner.checkLevels(frag, big.copy(size = 1L)))
+  }
+
+  test("only the flagship and stream campaigns: an unknown name fails and lists them") {
+    assert(Runner.Campaigns.map(_.name) == Seq("flagship", "stream"))
+    val e = intercept[RuntimeException](Runner.campaign("dedup"))
+    assert(e.getMessage.contains("flagship, stream"), e.getMessage)
   }
 }

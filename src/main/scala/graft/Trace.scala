@@ -16,6 +16,9 @@ import scala.jdk.CollectionConverters._
   *    (min of 2);
   *  - `full_s`: the same for a `write.format("noop")` of every column, the
   *    work a caller that reads the output pays;
+  *  - `compiles`: generated classes compiled over all of the query's runs
+  *    (a first run compiles its classes; a run whose generated source is
+  *    the same again compiles none);
   *  and, from the last full run:
   *  - `jobs`: Spark jobs started;
   *  - `stages`: per stage, tasks, wall and summed task run time, and the
@@ -47,8 +50,11 @@ object Trace {
   final case class Plan(action: String, operators: Seq[Operator])
   final case class Batch(id: Long, rows: Long, durationMs: Seq[(String, Long)],
       stateCommitMs: Seq[Long])
-  /** What a session ran between two [[Recorder.take]] calls. */
-  final case class Window(jobs: Int, stages: Seq[Stage], plans: Seq[Plan], batches: Seq[Batch])
+  /** What a session ran between two [[Recorder.take]] calls. `compiles`
+    * counts the generated classes compiled meanwhile: Spark's codegen
+    * cache misses, counted for the whole JVM, not for the session only. */
+  final case class Window(jobs: Int, stages: Seq[Stage], plans: Seq[Plan], batches: Seq[Batch],
+      compiles: Long)
 
   /** Jobs, stages, executed plans and micro-batches of one session. */
   final class Recorder {
@@ -56,17 +62,24 @@ object Trace {
     private val stages = ArrayBuffer.empty[Stage]
     private val plans = ArrayBuffer.empty[Plan]
     private val batches = ArrayBuffer.empty[Batch]
+    private var compilesAt = compilesSoFar
 
     /** everything recorded since the last call, once every event posted so
       * far has been delivered */
     def take(spark: SparkSession): Window = {
       graftshim.drainListenerBus(spark)
       synchronized {
-        val w = Window(jobs, stages.toSeq, plans.toSeq, batches.toSeq)
-        jobs = 0; stages.clear(); plans.clear(); batches.clear()
+        val now = compilesSoFar
+        val w = Window(jobs, stages.toSeq, plans.toSeq, batches.toSeq, now - compilesAt)
+        jobs = 0; stages.clear(); plans.clear(); batches.clear(); compilesAt = now
         w
       }
     }
+
+    /** Janino compiles in this JVM so far: one sample of the compile-time
+      * histogram per compile */
+    private def compilesSoFar: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     private[Trace] val jobListener: SparkListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -171,6 +184,7 @@ object Trace {
   /** One query's trace as one JSON line. */
   def query(spark: SparkSession, dir: String, name: String, fn: Bench.Query): String = {
     val rec = install(spark)
+    var compiles = 0L
     def timed(action: DataFrame => Unit): (Double, Window) = {
       val runs = (1 to Trials).map { _ =>
         rec.take(spark)
@@ -178,6 +192,7 @@ object Trace {
         action(fn(spark, dir))
         ((System.nanoTime() - t0) / 1e9, rec.take(spark))
       }
+      compiles += runs.map(_._2.compiles).sum
       (runs.map(_._1).min, runs.last._2)
     }
     val line = new java.util.LinkedHashMap[String, Any]
@@ -189,6 +204,7 @@ object Trace {
       val (fullS, w) = timed(_.write.format("noop").mode("overwrite").save())
       line.put("full_s", fullS)
       line.put("jobs", w.jobs)
+      line.put("compiles", compiles)
       line.put("stages", w.stages.map(s => obj(Seq("id" -> s.id, "name" -> s.name,
         "tasks" -> s.tasks, "wall_ms" -> s.wallMs, "run_ms" -> s.runMs) ++ Seq(
         "gc_ms" -> s.gcMs, "input_bytes" -> s.inputBytes,

@@ -14,7 +14,7 @@ import graft.hotdog.config.HotdogConfig
   *    no shuffle, skew-immune.
   *  - the fan-out write repartitions by (topic, salt) so one hot topic
   *    (or hot source) cannot pin a single writer task — salting spreads
-  *    each topic over up to `writeSaltBuckets` files/tasks while keeping
+  *    each topic over up to `saltBuckets` files/tasks while keeping
   *    dynamic-partition writes to one topic-dir per task.
   *  - idempotent resume: dynamic partition overwrite per topic + an audit
   *    table recording per-partition lineage; a re-run of the same batch_id
@@ -93,7 +93,7 @@ object Pipeline {
     // for no consumer benefit.
     val emitted = emittedOnly(routed)
       .select(col("doc_id"), col("source"), col("output"), col("topic"))
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", batchIdLit(batchId))
     withConf(routed.sparkSession, DynamicOverwrite) {
       val t0 = System.nanoTime()
       emitted
@@ -108,6 +108,15 @@ object Pipeline {
   }
 
   private val DynamicOverwrite = "spark.sql.sources.partitionOverwriteMode" -> "dynamic"
+
+  /** The `batch_id` partition value, as a string literal. Spark inlines a
+    * `LongType` literal into the generated Java source (`write(4, 3L)`,
+    * `hashLong(3L, ...)`), so each batch id would compile its own classes
+    * and run them cold; a string reaches the generated code through its
+    * `references`, and the source stays the same from batch to batch. The
+    * directory is `batch_id=<n>` either way, and reading it back infers
+    * the same type. */
+  private def batchIdLit(batchId: Long): Column = lit(batchId.toString)
 
   /** Run `body` with the given session confs set, then put each back as it
     * was: its previous explicit value, or unset if it had none. */
@@ -243,7 +252,7 @@ object Pipeline {
         case ((topic, f), c) => org.apache.spark.sql.Row(topic, f, c(0), c(1), c(2), c(3), c(4))
       }: _*)
     val audit = spark.createDataFrame(rows, AuditSchema)
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", batchIdLit(batchId))
       .withColumn("completed_at", current_timestamp())
     writeAuditDf(spark, audit, auditDir)
   }
@@ -263,7 +272,7 @@ object Pipeline {
         sum(col("err_merge_invalid_json")).as("merge_invalid_json"),
         sum(col("err_merge_target_not_json")).as("merge_target_not_json"),
         sum(col("err_topic_parse_failed")).as("topic_parse_failed"))
-      .withColumn("batch_id", lit(batchId))
+      .withColumn("batch_id", batchIdLit(batchId))
       .withColumn("completed_at", current_timestamp())
     writeAuditDf(routed.sparkSession, audit, auditDir)
   }

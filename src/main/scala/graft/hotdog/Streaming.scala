@@ -11,7 +11,9 @@ import graft.hotdog.config.HotdogConfig
   *
   *  - routeStream: micro-batch foreachBatch reusing the EXACT batch router
   *    + idempotent per-batch fan-out (checkpointed source offsets + dynamic
-  *    partition overwrite by batch_id = exactly-once sink semantics).
+  *    partition overwrite by batch_id = exactly-once sink semantics). Its
+  *    session is not artifact-isolated, so its generated classes compile
+  *    once per process, not once per query start.
   *  - windowedTopicCounts: tumbling-window per-topic counts with a
   *    watermark for late rows — the streaming analog of the
   *    kafka.submitted.<topic> running counters.
@@ -21,7 +23,16 @@ object Streaming {
   /** Stream the sequences directory, route each micro-batch, fan out to
     * per-topic parquet + audit. Restarting with the same checkpoint never
     * reprocesses a completed batch; a batch that crashed mid-write is
-    * re-run idempotently (partition overwrite by its batch_id). */
+    * re-run idempotently (partition overwrite by its batch_id).
+    *
+    * The query's session is not artifact-isolated. Every streaming query
+    * runs in a clone of `spark`, an isolated clone runs its jobs under a
+    * class loader of its own, and Spark's codegen cache is keyed by
+    * (thread context class loader, source): each start would compile every
+    * generated class again and run it cold. The clone copies the conf in
+    * `start()`, so isolation is off for the clone only and `spark`'s conf
+    * is put back as found. This is safe because `routeStream` adds no jars
+    * or files to its session: there are no artifacts to isolate. */
   def routeStream(spark: SparkSession, inputDir: String, cfg: HotdogConfig,
       outDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 16): StreamingQuery = {
@@ -29,7 +40,7 @@ object Streaming {
       .schema(model.sequencesSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputDir)
-    seqs.writeStream
+    val writer = seqs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
@@ -39,8 +50,10 @@ object Streaming {
           s"$outDir-audit", batchId)
         ()
       }
-      .start()
+    Pipeline.withConf(spark, ArtifactIsolation -> "false")(writer.start())
   }
+
+  private[hotdog] val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
   /** hotdog's RUNNING per-topic counters (`kafka.submitted.<topic>` in the
     * reference's DashMap — src/status.rs:130-140) as managed streaming

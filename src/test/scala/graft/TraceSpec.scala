@@ -27,7 +27,7 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(json.map(_.get("query").asText) == Bench.ordered(Some(names), "test").map(_._1))
     for (j <- json) {
       val q = j.get("query").asText
-      for (f <- Seq("count_s", "rows", "full_s", "jobs", "stages", "plans", "batches"))
+      for (f <- Seq("count_s", "rows", "full_s", "jobs", "compiles", "stages", "plans", "batches"))
         assert(j.has(f), s"$q: no $f in $j")
       assert(!j.has("error"), j)
       assert(j.get("rows").asLong == SparkEntry.queries(q)(spark, sf).count(), q)
@@ -65,6 +65,17 @@ class TraceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(counter)
     assert(graftshim.executionListeners(spark).size ==
       graftshim.executionListeners(spark).distinct.size)
+  }
+
+  test("compiles: > 0 on a query's first run, 0 on a run of the same generated source") {
+    // a literal no other query carries: its classes cannot be cached yet
+    val k = System.nanoTime()
+    val fn: Bench.Query = (s, _) =>
+      s.range(1000).select((org.apache.spark.sql.functions.col("id") * k).as("x"))
+    def compiles = new ObjectMapper().readTree(Trace.query(spark, sf, "fresh", fn))
+      .get("compiles").asLong
+    assert(compiles > 0)
+    assert(compiles == 0)
   }
 
   test("Bench's order runs every streaming query after every batch query") {
